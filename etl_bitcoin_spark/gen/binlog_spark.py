@@ -48,8 +48,8 @@ def derive_binlog_columns(
 ) -> DataFrame:
     """Map an ``id`` column (monotonic ordinal) to the full binlog event
     schema via pure deterministic hash-mixing — usable over spark.range
-    (bulk generation) or a live streaming source's ordinal (the
-    pull-based tailer in streaming/sources.py)."""
+    (bulk generation) or any other monotonic ordinal, such as a live
+    streaming source's."""
     conv_num = F.when(
         _u(seed, 1) < hot_share,
         F.pmod(F.hash("id", F.lit(seed), F.lit(2)), F.lit(n_hot)),

@@ -23,11 +23,10 @@ winner with a batch summary is exact:
   - the batch's own post-last-D winner then competes with any surviving
     stored row by (ts desc, lsn desc).
 
-Everything below is pure DataFrame ops — two shuffles per batch (one
-window over the batch keyed summary, one window over the
-stored-union-winner frame), both on the primary key, never on conv_id
-alone, so a hot conv_id cannot skew a partition (turn_idx participates
-in every hash). Catalyst/AQE handle the physical plan.
+Everything below is pure DataFrame ops — one window over the union of
+stored rows and batch events per batch, keyed on the primary key, never
+on conv_id alone, so a hot conv_id cannot skew a partition (turn_idx
+participates in every hash). Catalyst/AQE handle the physical plan.
 
 Reference analogs: DBTx buffered apply (neo4j_csv.go:84-117), in-batch
 dedup set (neo4j_csv.go:97), resume watermark (neo4j_csv.go:62-79).
@@ -59,19 +58,6 @@ BINLOG_DDL = (
 )
 VALUE_COLS = ["role", "text", "tool", "ts"]
 
-# merge_strategy="auto" crossover: batches averaging at least this many
-# events per touched key resolve with the hash-agg (update-storm)
-# formulation, below it with the single-sort window. The measured
-# crossover sits between ~1 event/key (window wins 1.4x, round-1 spike)
-# and ~1000 events/key (agg wins 1.9x, scripts/spike_hotkey.py); 4 is
-# safely past the window regime's flat zone on both spikes. Pinned by
-# tests/test_property_merge.py::test_auto_strategy_crossover: below it
-# auto must resolve "window", above it "agg", and state == oracle on
-# BOTH sides of the boundary (the HLL estimate may land either way at
-# exactly 4).
-AUTO_AGG_MULTIPLICITY = 4.0
-
-
 def reconcile_schema(df: DataFrame, ddl: str) -> DataFrame:
     """Additive schema reconciliation: project ``df`` onto the columns of
     ``ddl``, backfilling missing columns as typed nulls (the late-added
@@ -90,36 +76,6 @@ def reconcile_schema(df: DataFrame, ddl: str) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(dtype).alias(name))
     return df.select(*cols)
-
-
-def lww_batch_summary(events: DataFrame) -> DataFrame:
-    """Collapse a batch of change events to one row per touched key:
-
-    ``d_lsn``     greatest lsn of a D for the key (null if none)
-    ``win_*``     the post-last-D LWW winner's values (null if the key
-                  ends the batch deleted)
-
-    Single shuffle: both the tombstone max and the winner ranking run as
-    windows over the same (conv_id, turn_idx) partitioning.
-    """
-    w = Window.partitionBy(*KEY_COLS)
-    w_rank = w.orderBy(F.col("ts").desc(), F.col("lsn").desc())
-    is_d = F.col("op") == F.lit("D")
-    df = events.withColumn("d_lsn", F.max(F.when(is_d, F.col("lsn"))).over(w))
-    live = ~is_d & (F.col("lsn") > F.coalesce(F.col("d_lsn"), F.lit(-1)))
-    df = df.withColumn(
-        "rn", F.row_number().over(w_rank.orderBy(
-            live.desc(), F.col("ts").desc(), F.col("lsn").desc()))
-    )
-    # rn=1 per key is either the LWW winner among live rows, or (if no
-    # live rows) an arbitrary dead row carrying d_lsn — both are needed.
-    top = df.filter(F.col("rn") == 1)
-    return top.select(
-        *KEY_COLS,
-        F.col("d_lsn"),
-        *[F.when(live, F.col(c)).alias(f"win_{c}") for c in VALUE_COLS],
-        F.when(live, F.col("lsn")).alias("win_lsn"),
-    )
 
 
 def _resolve_union(
@@ -318,11 +274,9 @@ def merge_batch_direct(
 ) -> DataFrame:
     """Fused merge: stored rows participate directly as pseudo-events
     (tombstones as D, winners as U with their original lsn), so the
-    batch-summary window and the stored-merge window collapse into ONE
-    shuffle. Exactly the algebra of lww_batch_summary +
-    merge_summary_into, minus a stage barrier and a second pass of the
-    batch through the exchange. With ``lsn_stats`` the batch's lsn stats
-    ride the merge job (events tagged, stored rows excluded)."""
+    batch summary and the merge into stored state are ONE window over
+    one shuffle. With ``lsn_stats`` the batch's lsn stats ride the merge
+    job (events tagged, stored rows excluded)."""
     prov = [p for c in patch_cols or [] for p in patch_meta(c)]
     st_rows = stored.select(
         *KEY_COLS, *VALUE_COLS, *prov, LSN_COL, DELETED_COL
@@ -335,111 +289,6 @@ def merge_batch_direct(
         st_rows.unionByName(ev_rows), n_buckets, lsn_stats=lsn_stats,
         patch_cols=patch_cols,
     )
-
-
-def merge_batch_agg(
-    stored: DataFrame, events: DataFrame, n_buckets: int | None = None
-) -> DataFrame:
-    """Hash-aggregation formulation of the merge — the UPDATE-STORM
-    strategy. Same algebra as merge_batch_direct (winner + retained
-    tombstone per key), different physical plan: a two-phase hash
-    aggregate with map-side partial combine instead of a key-partitioned
-    window sort. When a batch carries many events per key (hot
-    conversation, narrow lsn window), partial aggregation collapses the
-    shuffle to ~1 row/key/task and wins big; at ~1 event/key the extra
-    join + agg exchanges lose to the single window sort.
-
-    Measured (scripts/spike_hotkey.py, 5M events / <=5000 keys /
-    hot_share=0.5, best of 3): agg 1.91 s vs window 3.57 s (1.9x).
-    Round-1 spike at ~1 event/key: agg 3.48 s vs window 2.42 s — hence
-    a strategy knob (apply_batch merge_strategy), window by default.
-
-    LWW ordering note: max_by(payload, struct(ts, lsn)) compares
-    (ts, lsn) lexicographically == the window's (ts desc, lsn desc)
-    ranking; null ts sorts lowest in both formulations."""
-    keys = KEY_COLS
-    st_rows = stored.select(*KEY_COLS, *VALUE_COLS, LSN_COL, DELETED_COL)
-    rows = st_rows.unionByName(events_as_rows(events))
-    if n_buckets is not None:
-        rows = rows.repartition(n_buckets, *keys)
-    t = (
-        rows.filter(F.col(DELETED_COL))
-        .groupBy(*keys)
-        .agg(F.max(LSN_COL).alias("__t"))
-    )
-    live = (
-        rows.filter(~F.col(DELETED_COL))
-        .join(t, keys, "left")
-        .filter(F.col(LSN_COL) > F.coalesce(F.col("__t"), F.lit(-1)))
-    )
-    payload = F.struct(*VALUE_COLS, F.col(LSN_COL))
-    order = F.struct(F.col("ts"), F.col(LSN_COL))
-    winners = (
-        live.groupBy(*keys)
-        .agg(F.max_by(payload, order).alias("w"))
-        .select(
-            *keys,
-            *[F.col(f"w.{c}").alias(c) for c in VALUE_COLS],
-            F.col(f"w.{LSN_COL}").alias(LSN_COL),
-            F.lit(False).alias(DELETED_COL),
-        )
-    )
-    tombs = t.select(
-        *keys,
-        *[F.lit(None).cast(d).alias(c) for c, d in _value_types(stored)],
-        F.col("__t").alias(LSN_COL),
-        F.lit(True).alias(DELETED_COL),
-    )
-    return winners.unionByName(tombs)
-
-
-def merge_summary_into(
-    stored: DataFrame, summary: DataFrame, n_buckets: int | None = None
-) -> DataFrame:
-    """Merge a batch summary into the stored state of the affected
-    buckets. Returns the new full content of those buckets (with LSN_COL
-    and DELETED_COL).
-
-    Deletes are the one order-sensitive part of LWW replay, so the lake
-    **persists tombstones**: a deleted key keeps a row with
-    ``__deleted=true`` and ``__lsn`` = the delete's lsn. A late I/U event
-    (lower lsn delivered after the delete) then loses to the tombstone —
-    without it, the key would wrongly resurrect. Resolution per key:
-
-    1. ``t`` = max tombstone lsn (stored tombstone vs batch d_lsn);
-    2. live candidates = non-deleted rows with lsn > t
-       (stored winner + batch winner);
-    3. LWW among candidates by (ts desc, lsn desc) — which is
-       replay-order-independent for I/U events;
-    4. emit the winner (if any) plus the tombstone row (kept so future
-       late events keep losing).
-
-    One union + one key-partitioned window: a single shuffle.
-    """
-    tombs = summary.filter(F.col("d_lsn").isNotNull()).select(
-        *KEY_COLS,
-        *[F.lit(None).cast(t).alias(c) for c, t in _value_types(stored)],
-        F.col("d_lsn").alias(LSN_COL),
-        F.lit(True).alias(DELETED_COL),
-    )
-    winners = summary.filter(F.col("win_lsn").isNotNull()).select(
-        *KEY_COLS,
-        *[F.col(f"win_{c}").alias(c) for c in VALUE_COLS],
-        F.col("win_lsn").alias(LSN_COL),
-        F.lit(False).alias(DELETED_COL),
-    )
-    cols = [*KEY_COLS, *VALUE_COLS, LSN_COL, DELETED_COL]
-    unioned = (
-        stored.select(*cols).unionByName(tombs.select(*cols)).unionByName(
-            winners.select(*cols)
-        )
-    )
-    return _resolve_union(unioned, n_buckets)
-
-
-def _value_types(stored: DataFrame) -> list[tuple[str, str]]:
-    by_name = {f.name: f.dataType.simpleString() for f in stored.schema}
-    return [(c, by_name[c]) for c in VALUE_COLS]
 
 
 def sparse_lsn_islands(distinct_lsns: DataFrame) -> list[list[int]]:
@@ -533,6 +382,34 @@ def _staged_lsn_islands(spark, staged_files: list[str], n_rows: int):
     return sparse_lsn_islands(df)
 
 
+def _observed_lineage(obs, ev: DataFrame, out: dict[str, Any],
+                      lsn_range_hint=None):
+    """Deferred commit lineage for the plans whose batch-lsn stats ride
+    the resolution job as an Observation (``_resolve_union``
+    lsn_stats): once the write action ran, fill ``out`` with the
+    batch's events/multiplicity/lsn_range and return the commit's
+    ``(lsn_range, lsn_ranges)``."""
+
+    def _lineage(_staged):
+        got = obs.get
+        n = int(got["n_rows"] or 0) - int(got["n_dup"] or 0)
+        out["events"] = n
+        nk = int(got["nk"] or 0)
+        out["multiplicity"] = (n / nk) if nk else 1.0
+        if n == 0:
+            return None, None
+        lo, hi = int(got["lo"]), int(got["hi"])
+        out["lsn_range"] = [lo, hi]
+        if lsn_range_hint is not None:
+            return lsn_range_hint, None
+        if n == hi - lo + 1:
+            return (lo, hi), None
+        # sparse late batch (rare path): exact islands, extra job
+        return None, sparse_lsn_islands(ev.select("lsn").distinct())
+
+    return _lineage
+
+
 def apply_batch(
     lake: LakeTable,
     events: DataFrame,
@@ -541,7 +418,6 @@ def apply_batch(
     assume_all_buckets: bool = False,
     lsn_range_hint: tuple[int, int] | None = None,
     merge_mode: str = "write",
-    merge_strategy: str = "window",
     delta_plan: str = "summary",
     key_bloom: bool = False,
     ref: str = "main",
@@ -568,13 +444,6 @@ def apply_batch(
     conversation") then skips files the Bloom proves clean. Opt-in:
     building a Bloom reads the fresh file's key column once, a tax the
     sub-second raw-delta tail should not pay unless lookups matter.
-
-    ``merge_strategy``: "window" (single-sort resolution, the ~1
-    event/key CDC norm), "agg" (hash-agg with map-side combine, 1.9x on
-    hot-key update storms), or "auto" — per-batch choice from the
-    events-per-touched-key multiplicity, measured by an HLL sketch that
-    rides whichever pre-job the path already runs (the stats agg, or
-    the bucket-discovery job); paths with no pre-job resolve to window.
 
     ``delta_plan`` (merge_mode="read" only): "summary" collapses the
     batch to per-key rows through the resolution window (one exchange +
@@ -613,11 +482,6 @@ def apply_batch(
     n_buckets = snap["n_buckets"]
     hwm = snap["lineage"]["hwm"]
     patch_cols = snap.get("patch_cols") or None
-    if patch_cols and merge_strategy != "window":
-        # cell-level LWW resolves through the window formulation only:
-        # the agg strategy's single max_by(payload) picks one ROW per
-        # key, which would discard sibling rows' cell writes
-        merge_strategy = "window"
 
     ev = reconcile_schema(events, BINLOG_DDL)
     if already_applied_filter is not None:
@@ -799,47 +663,19 @@ def apply_batch(
             patch_cols=patch_cols,
         ).withColumn(BUCKET_COL, lake.bucket_expr(n_buckets, KEY_COLS))
         out: dict[str, Any] = {}
-
-        def _lineage(_staged):
-            got = obs.get
-            n_rows = int(got["n_rows"] or 0)
-            n = n_rows - int(got["n_dup"] or 0)
-            out["events"] = n
-            nk = int(got["nk"] or 0)
-            out["multiplicity"] = (n / nk) if nk else 1.0
-            if n == 0:
-                return None, None
-            lo, hi = int(got["lo"]), int(got["hi"])
-            out["lsn_range"] = [lo, hi]
-            if lsn_range_hint is not None:
-                return lsn_range_hint, None
-            if n == hi - lo + 1:
-                return (lo, hi), None
-            # sparse late batch (rare path): exact islands, extra job
-            return None, sparse_lsn_islands(ev.select("lsn").distinct())
-
         ok = lake.commit(
             content,
             [],
             batch_id,
             metrics={"merge_mode": "read"},
             mode="delta",
-            lineage_fn=_lineage,
+            lineage_fn=_observed_lineage(obs, ev, out, lsn_range_hint),
             key_bloom=key_bloom,
             ref=ref,
         )
         return {"applied": ok, **out}
 
-    if assume_all_buckets and lsn_range_hint is None and merge_strategy in (
-        "window", "auto",
-    ):
-        # ("auto" resolves to window here: this fused path runs no
-        # pre-job that a multiplicity signal could ride, and bulk drains
-        # are the ~1 event/key shape the window strategy wins anyway.
-        # Callers replaying a known update storm pass "agg" explicitly
-        # — a sticky switch fed by the ridden multiplicity sketch was
-        # spiked and measured SLOWER end-to-end, see the numbers in
-        # streaming/tailer.py and ROADMAP #10.)
+    if assume_all_buckets and lsn_range_hint is None:
         # Single-job bulk-stream path (merge-on-write): every bucket is
         # touched, so there is no discovery to do — and the batch's lsn
         # stats ride the MERGE job itself (events tagged __evt inside
@@ -867,39 +703,20 @@ def apply_batch(
             stored, ev, n_buckets, lsn_stats=obs, patch_cols=patch_cols
         ).withColumn(BUCKET_COL, lake.bucket_expr(n_buckets, KEY_COLS))
         out: dict[str, Any] = {}
-
-        def _lineage(_staged):
-            got = obs.get
-            n_rows = int(got["n_rows"] or 0)
-            n = n_rows - int(got["n_dup"] or 0)
-            out["events"] = n
-            nk = int(got["nk"] or 0)
-            out["multiplicity"] = (n / nk) if nk else 1.0
-            if n == 0:
-                return None, None
-            lo, hi = int(got["lo"]), int(got["hi"])
-            out["lsn_range"] = [lo, hi]
-            if n == hi - lo + 1:
-                return (lo, hi), None
-            return None, sparse_lsn_islands(ev.select("lsn").distinct())
-
         ok = lake.commit(
             merged,
             affected,
             batch_id,
             metrics={"buckets_touched": n_buckets},
             base_version=snap["version"],
-            lineage_fn=_lineage,
+            lineage_fn=_observed_lineage(obs, ev, out),
             # stored state resolved at snap: shard generations at or
             # below it are folded into this rewrite
             delta_floor=snap["version"],
             key_bloom=key_bloom,
             ref=ref,
         )
-        return {
-            "applied": ok, "buckets": affected,
-            "merge_strategy": "window", **out,
-        }
+        return {"applied": ok, "buckets": affected, **out}
 
     cached = False
     try:
@@ -929,24 +746,8 @@ def apply_batch(
                         lake.bucket_expr(n_buckets, KEY_COLS)
                     ).alias("bks")
                 )
-            if merge_strategy == "auto":
-                # The multiplicity signal (events per touched key) RIDES
-                # the stats job already running on the cached batch —
-                # approx_count_distinct costs one HLL sketch, no extra
-                # job, no extra shuffle.
-                aggs.append(
-                    F.approx_count_distinct(
-                        F.concat_ws("\x1f", *KEY_COLS)
-                    ).alias("nk")
-                )
             rng = ev.agg(*aggs).collect()[0]
             lo, hi, n = rng["lo"], rng["hi"], rng["n"]
-            if merge_strategy == "auto":
-                merge_strategy = (
-                    "agg"
-                    if n >= AUTO_AGG_MULTIPLICITY * max(1, rng["nk"])
-                    else "window"
-                )
             if n == 0:
                 lake.commit(
                     lake.read(buckets=[]).limit(0).withColumn(
@@ -973,26 +774,7 @@ def apply_batch(
             affected = list(range(n_buckets))
         elif lsn_range_hint is not None:
             b = lake.bucket_expr(n_buckets, KEY_COLS).alias("b")
-            if merge_strategy == "auto":
-                # Same trick on the hint path: the multiplicity signal
-                # rides the bucket-discovery job (per-bucket counts +
-                # HLL key sketches — keys never span buckets, so the
-                # sums are the batch totals).
-                rows = ev.groupBy(b).agg(
-                    F.count("*").alias("c"),
-                    F.approx_count_distinct(
-                        F.concat_ws("\x1f", *KEY_COLS)
-                    ).alias("nk"),
-                ).collect()
-                affected = sorted(int(r["b"]) for r in rows)
-                tot = sum(r["c"] for r in rows)
-                nk = max(1, sum(r["nk"] for r in rows))
-                merge_strategy = (
-                    "agg" if tot >= AUTO_AGG_MULTIPLICITY * nk
-                    else "window"
-                )
-            else:
-                affected = [r["b"] for r in ev.select(b).distinct().collect()]
+            affected = [r["b"] for r in ev.select(b).distinct().collect()]
         else:
             affected = sorted(rng["bks"])
         # Pin the stored read to the snapshot version the guard saw, so
@@ -1003,31 +785,16 @@ def apply_batch(
             version=snap["version"], buckets=affected,
             resolve_deltas=False,
         )
-        # merge_strategy: "window" (single-sort resolution, wins at ~1
-        # event/key) vs "agg" (two-phase hash aggregate with map-side
-        # combine, 1.9x faster under hot-key update storms — see
-        # merge_batch_agg docstring for the measured crossover).
-        if merge_strategy == "auto":
-            # no pre-job ran on this path (assume_all_buckets + hint):
-            # no free signal, default to the window formulation
-            merge_strategy = "window"
-        if merge_strategy == "window":
-            merged = merge_batch_direct(
-                stored, ev, n_buckets, patch_cols=patch_cols
-            )
-        else:
-            merged = merge_batch_agg(stored, ev, n_buckets)
-        merged = merged.withColumn(
-            BUCKET_COL, lake.bucket_expr(n_buckets, KEY_COLS)
-        )
+        merged = merge_batch_direct(
+            stored, ev, n_buckets, patch_cols=patch_cols
+        ).withColumn(BUCKET_COL, lake.bucket_expr(n_buckets, KEY_COLS))
         ok = lake.commit(
             merged,
             affected,
             batch_id,
             lsn_range=None if sub_ranges is not None else (lo, hi),
             lsn_ranges=sub_ranges,
-            metrics={"events": n, "buckets_touched": len(affected),
-                     "merge_strategy": merge_strategy},
+            metrics={"events": n, "buckets_touched": len(affected)},
             # content was computed against the snapshot read above —
             # a concurrent commit to any affected bucket must conflict,
             # disjoint-bucket writers rebase cleanly
@@ -1041,7 +808,6 @@ def apply_batch(
             "events": n,
             "lsn_range": [lo, hi],
             "buckets": affected,
-            "merge_strategy": merge_strategy,
         }
     finally:
         if cached:

@@ -73,8 +73,8 @@ def _winners(binlog: DataFrame) -> DataFrame:
     D rows), join back (AQE broadcasts the aggregated D side when small)
     and the winner per key is one ``max_by(payload, (ts, lsn))`` hash
     aggregate with map-side partial combine. Identical algebra to the
-    window formulation (``lww_batch_summary`` + win_lsn filter): the
-    (ts, lsn) struct comparison IS the window's (ts desc, lsn desc)
+    engine's window formulation (``operators.merge._resolve_union``):
+    the (ts, lsn) struct comparison IS the window's (ts desc, lsn desc)
     ranking (lsn unique; null ts sorts lowest in both), and D-filtered
     rows with lsn > last-delete are exactly the window's ``live`` class.
     Vs the window form this removes the full-width sort and, at the

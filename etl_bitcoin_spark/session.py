@@ -156,51 +156,53 @@ def _warm_engine_body(spark) -> None:
         F.count("*").alias("nsz"),
         F.collect_set("gram").alias("__gs"),
     ).cache()
-    bands = sigs.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.concat_ws(
-                    "|", F.col(f"g{2 * j}").cast("string"),
-                    F.col(f"g{2 * j + 1}").cast("string")
-                ).alias("sig"),
-            ) for j in range(2)
-        ])).alias("bs"),
-    ).select(
-        "doc_id", F.col("bs.band").alias("band"),
-        F.col("bs.sig").alias("sig"),
-    )
-    ba, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    try:
+        bands = sigs.select(
+            "doc_id",
+            F.explode(F.array(*[
+                F.struct(
+                    F.lit(j).alias("band"),
+                    F.concat_ws(
+                        "|", F.col(f"g{2 * j}").cast("string"),
+                        F.col(f"g{2 * j + 1}").cast("string")
+                    ).alias("sig"),
+                ) for j in range(2)
+            ])).alias("bs"),
+        ).select(
+            "doc_id", F.col("bs.band").alias("band"),
+            F.col("bs.sig").alias("sig"),
         )
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    da = sigs.select(F.col("doc_id").alias("doc_a"),
-                     F.col("nsz").alias("sza"),
-                     F.col("__gs").alias("__ga"))
-    db = sigs.select(F.col("doc_id").alias("doc_b"),
-                     F.col("nsz").alias("szb"),
-                     F.col("__gs").alias("__gb"))
-    isz = F.size(F.array_intersect(F.col("__ga"), F.col("__gb")))
-    (
-        cand.join(da, "doc_a").join(db, "doc_b")
-        .withColumn(
-            "jac",
-            F.round(isz / (F.col("sza") + F.col("szb") - isz), 5),
+        ba, bb = bands.alias("a"), bands.alias("b")
+        cand = (
+            ba.join(
+                bb,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.sig") == F.col("b.sig"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct()
         )
-        .filter(F.col("jac") >= 0.4)
-        .select("doc_a", "doc_b", "jac")
-        .write.format("noop").mode("overwrite").save()
-    )
-    sigs.unpersist()
+        da = sigs.select(F.col("doc_id").alias("doc_a"),
+                         F.col("nsz").alias("sza"),
+                         F.col("__gs").alias("__ga"))
+        db = sigs.select(F.col("doc_id").alias("doc_b"),
+                         F.col("nsz").alias("szb"),
+                         F.col("__gs").alias("__gb"))
+        isz = F.size(F.array_intersect(F.col("__ga"), F.col("__gb")))
+        (
+            cand.join(da, "doc_a").join(db, "doc_b")
+            .withColumn(
+                "jac",
+                F.round(isz / (F.col("sza") + F.col("szb") - isz), 5),
+            )
+            .filter(F.col("jac") >= 0.4)
+            .select("doc_a", "doc_b", "jac")
+            .write.format("noop").mode("overwrite").save()
+        )
+    finally:
+        sigs.unpersist()
     # two-phase LWW shape (tombstone maxima join-back + max_by
     # struct winner + date_format projection)
     mod7 = F.pmod(F.col("id"), F.lit(7))

@@ -1,7 +1,4 @@
 from .poll import PollTailer
-from .sources import RateSourceTailer, rate_binlog_stream
 from .tailer import BinlogTailer
 
-__all__ = [
-    "BinlogTailer", "PollTailer", "RateSourceTailer", "rate_binlog_stream",
-]
+__all__ = ["BinlogTailer", "PollTailer"]

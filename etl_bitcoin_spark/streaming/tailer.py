@@ -55,7 +55,6 @@ class BinlogTailer:
         assume_all_buckets: bool = False,
         merge_on_read: bool = False,
         compact_max_deltas: int | None = 8,
-        merge_strategy: str = "window",
         compact_policy: str = "inline",
         compact_max_buckets: int | None = None,
         views: list | None = None,
@@ -136,17 +135,6 @@ class BinlogTailer:
         self._raw_ok = delta_plan in ("raw", "auto")
         self._maint = None  # lazy single-thread executor (async policy)
         self._maint_fut = None
-        # "window" (default), "agg" (the update-storm strategy), or
-        # "auto" (per-batch multiplicity signal riding the stats job);
-        # see operators.merge.merge_batch_agg for the crossover. On the
-        # fused bulk path (assume_all_buckets) auto stays window: a
-        # sticky agg switch was SPIKED and measured SLOWER end-to-end
-        # (storm WAL, 2M events/8 segs: window 8.34s vs sticky-agg
-        # 10.45s best-of-3) — agg forfeits the single-job fusion (stats
-        # job + cache per batch) and that costs more than its 1.9x
-        # merge win buys. The multiplicity telemetry still rides the
-        # merge job (apply_batch result / commit metrics).
-        self.merge_strategy = merge_strategy
         self.bloom_path = os.path.join(checkpoint_dir, "lsn_bloom.state")
         self._bloom: LsnBloom | None = None
         self._bg = None  # lazy single-thread executor for async state IO
@@ -298,7 +286,6 @@ class BinlogTailer:
                     already_applied_filter=guard,
                     assume_all_buckets=self.assume_all_buckets,
                     merge_mode="read" if self.merge_on_read else "write",
-                    merge_strategy=self.merge_strategy,
                     delta_plan=(
                         "raw"
                         if (self.merge_on_read and self._raw_ok)

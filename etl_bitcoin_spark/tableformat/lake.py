@@ -482,6 +482,24 @@ class LakeTable:
         _atomic_write(os.path.join(self.manifest_dir, "_latest"), name)
         return True
 
+    def _next_claim_version(self, cur_version: int, ref: str) -> int:
+        """The version a commit based on ``cur_version`` of ``ref``
+        claims. On an UN-BRANCHED table the version chain IS the head,
+        and the claim detects a concurrent commit ONLY if it is exactly
+        ``cur_version + 1``: claiming global-max + 1 would let a commit
+        based on a STALE snapshot land ABOVE a concurrently-claimed
+        version and silently orphan that commit's content (observed: 3
+        concurrent raw appends, writer A read v1, writer B claimed v2,
+        A computed max(latest=2, cur=1)+1=3 and claimed v3 with parent
+        v1 — B's generation vanished from the chain). Branched tables
+        NEED global-max + 1 (versions are globally contiguous across
+        refs while a ref head trails), and there the post-claim head
+        CAS (parent check, ``_advance_head``) detects the race
+        instead."""
+        if ref != "main" or os.path.isdir(self._heads_dir("main")):
+            return max(self._latest_version(), cur_version) + 1
+        return cur_version + 1
+
     def _latest_version(self) -> int:
         """Resolve the latest committed version in O(1 + writer-lag) stat
         calls: start from the ``_latest`` hint (written after every
@@ -1196,20 +1214,18 @@ class LakeTable:
                     or (vhi is not None and st[0] > vhi)
                 )
 
-            # SHARED delta files (group_files' __dgrp / bucket-
-            # registered mod-shard __dshard) may hold STALE rows of
+            # SHARED delta files (live shard generations, or the
+            # bucket-registered __dgrp/__dshard files of tables written
+            # before generations existed) may hold STALE rows of
             # buckets that no longer reference them: a partial
-            # compaction folds a member bucket out by dropping ITS
-            # reference, but the immutable file survives via sibling
-            # references and still carries the folded bucket's old
-            # rows. Any val-stats prune keyed off a bucket's OWN
+            # compaction folds a member bucket out (its floor advances,
+            # or its reference drops), but the immutable file survives
+            # for its siblings and still carries the folded bucket's
+            # old rows. Any val-stats prune keyed off a bucket's OWN
             # reference list is then unsound (a pruned out-of-range
             # true winner could lose to a stale in-range shared-file
             # row), so resolution-time pruning is disabled table-wide
             # whenever a shared delta file is in the selected set.
-            # (live shard generations count as shared too — their rows
-            # span buckets inside one file; conservative: resolution-
-            # time val pruning stands down whenever they are present)
             has_shared = bool(live_gens) or any(
                 ("__dgrp=" in f) or ("__dshard=" in f)
                 for e in entries.values()
@@ -1261,8 +1277,8 @@ class LakeTable:
         def _keep(e, f, is_base=True):
             return _lkeep(e, f) and _kkeep(e, f) and _vkeep(e, f, is_base)
 
-        # dict.fromkeys: DEDUPE shared group-delta files (a file
-        # registered in N member buckets must scan once, not N times)
+        # dict.fromkeys: DEDUPE shared files (a file registered in N
+        # member buckets must scan once, not N times)
         base_files = list(dict.fromkeys(
             os.path.join(self.root, f)
             for e in entries.values()
@@ -1316,7 +1332,7 @@ class LakeTable:
 
         df = _scan(base_files)
         if buckets is not None and len(set(buckets)) < m["n_buckets"]:
-            # shared group-delta files hold rows of SIBLING buckets too:
+            # shared delta files hold rows of SIBLING buckets too:
             # a bucket-pruned read must filter rows to the requested
             # buckets by the derived bucket expression (a cheap narrow
             # filter; a no-op for bucket-exclusive files). Applied to
@@ -1426,7 +1442,6 @@ class LakeTable:
         lineage_fn=None,
         new_n_buckets: int | None = None,
         max_records_per_file: int | None = None,
-        group_files: bool = False,
         shard_mod: int | None = None,
         compression: str | None = None,
         delta_floor: int | None = None,
@@ -1451,26 +1466,11 @@ class LakeTable:
         a policy. ``replaced_buckets`` must be empty in both non-replace
         modes.
 
-        ``group_files=True`` (delta mode only) partitions the delta
-        write by bucket GROUP instead of bucket: one file per touched
-        group, registered in every member bucket's delta list (a shared
-        file). This collapses the per-batch file count from n_buckets
-        to n_groups — at 64 buckets the parquet-writer overhead of 64
-        tiny files dominated sub-second micro-batches (profiled ~20 ms
-        per file). Reads stay exact because ``read`` dedupes shared
-        files and filters rows to the requested buckets by the derived
-        bucket expression; compaction folds a victim bucket's rows out
-        of its referenced shared files without touching the other
-        members' references (the file itself is immutable and GC'd
-        when no bucket references it). Per-bucket ``delta_rows``
-        becomes an apportioned estimate (group-exact); ``n_deltas`` —
-        the read-amp policy signal — stays exact per bucket.
-
-        ``shard_mod=K`` (delta mode only, exclusive with group_files)
-        is the mod-shard variant: one file per shard ``s`` holding
-        buckets ``{b : b % K == s}``. With ``K | n_buckets`` and the
-        content repartitioned by the key columns into K partitions,
-        task t holds exactly shard t (``pmod(hash, nb) % K ==
+        ``shard_mod=K`` (delta mode only) writes one file per mod-shard
+        ``s`` holding buckets ``{b : b % K == s}`` instead of one file
+        per bucket. With ``K | n_buckets`` and the content
+        repartitioned by the key columns into K partitions, task t
+        holds exactly shard t (``pmod(hash, nb) % K ==
         pmod(hash, K)``), so the write is ONE even wave of K tasks
         emitting K files — the per-batch floor for sub-second raw
         delta appends (K = cluster width, not bucket count).
@@ -1515,13 +1515,9 @@ class LakeTable:
             raise ValueError(f"unknown commit mode {mode!r}")
         if mode != "replace" and replaced_buckets:
             raise ValueError(f"{mode} mode cannot replace buckets")
-        if group_files and mode != "delta":
-            raise ValueError("group_files requires mode='delta'")
         if shard_mod is not None:
             if mode != "delta":
                 raise ValueError("shard_mod requires mode='delta'")
-            if group_files:
-                raise ValueError("shard_mod and group_files are exclusive")
             if shard_mod < 1:
                 raise ValueError("shard_mod must be >= 1")
         if new_n_buckets is not None and mode != "replace":
@@ -1546,19 +1542,10 @@ class LakeTable:
         # never a serial driver crawl.
         t_c0 = time.perf_counter()
         part_col = BUCKET_COL
-        if group_files:
-            # one file per touched GROUP: derive the group id from the
-            # bucket column, drop the bucket column (reads re-derive it
-            # from the keys — the file needs no layout column at all)
-            part_col = "__dgrp"
-            gs = prev["group_size"]
-            new_content = new_content.withColumn(
-                part_col, F.expr(f"cast({BUCKET_COL} div {gs} as int)")
-            ).drop(BUCKET_COL)
-        elif shard_mod is not None:
+        if shard_mod is not None:
             # one file per MOD-SHARD: shard s holds buckets {b : b %
-            # shard_mod == s} — registered in each member's delta list
-            # like a group-shared file. When shard_mod divides n_buckets
+            # shard_mod == s}; the bucket column is dropped (reads
+            # re-derive it from the keys). When shard_mod divides n_buckets
             # AND the writer repartitioned by the key columns into
             # shard_mod partitions, task t holds exactly shard t
             # (pmod(hash, nb) % K == pmod(hash, K) for K | nb): one
@@ -1821,30 +1808,6 @@ class LakeTable:
                 },
             }
             per_bucket = {}
-        elif group_files:
-            # expand each shared GROUP file to every member bucket's
-            # delta list; rows are apportioned (group-exact, per-bucket
-            # estimate) — n_deltas, the policy signal, stays exact
-            gs = prev["group_size"]
-            nb = prev["n_buckets"]
-            expanded: dict[str, dict] = {}
-            for g, info in per_bucket.items():
-                members = list(
-                    range(int(g) * gs, min((int(g) + 1) * gs, nb))
-                )
-                n_m = max(1, len(members))
-                for j, b in enumerate(members):
-                    share = info["rows"] // n_m + (
-                        1 if j < info["rows"] % n_m else 0
-                    )
-                    expanded[str(b)] = {
-                        "files": list(info["files"]),
-                        "rows": share,
-                        "stats": dict(info.get("stats", {})),
-                        "kstats": dict(info.get("kstats", {})),
-                        "vstats": dict(info.get("vstats", {})),
-                    }
-            per_bucket = expanded
         if lineage_fn is not None:
             # Deferred lineage: the caller rode the lsn stats on the data
             # write itself (an Observation) — resolvable only now, after
@@ -1917,13 +1880,7 @@ class LakeTable:
             for b in replaced_buckets:
                 new_ptrs[str(b)] = None  # dropped unless re-added below
             for b, info in per_bucket.items():
-                if (
-                    info["rows"] <= 0 and mode != "replace"
-                    and not group_files
-                ):
-                    # (shared files: a zero APPORTIONED share still means
-                    # the shared file may hold this bucket's rows — the
-                    # reference must be registered regardless)
+                if info["rows"] <= 0 and mode != "replace":
                     continue
                 if mode == "replace":
                     if info["rows"] > 0:
@@ -2080,27 +2037,7 @@ class LakeTable:
             # O(#groups) from the aggregated group pointers). Pruned
             # generations' files stay referenced by older snapshots and
             # are GC'd by expire_snapshots like any other dead file.
-            # Version-claim CAS soundness (r7 third pass — this fixed a
-            # REAL lost-commit race caught by the bench's final_rows):
-            # on an UN-BRANCHED table the version chain IS the head, and
-            # the claim detects a concurrent commit ONLY if we claim
-            # exactly cur.version + 1 — claiming global-max + 1 lets a
-            # commit based on a STALE cur land ABOVE a concurrently-
-            # claimed version, silently orphaning that commit's content
-            # (observed: 3 concurrent raw appends, writer A read v1,
-            # writer B claimed v2, A computed max(latest=2, cur=1)+1=3
-            # and claimed v3 with parent v1 — B's generation vanished
-            # from the chain). Branched tables NEED global-max + 1
-            # (versions are globally contiguous across refs while a
-            # ref head trails), and there the post-claim _advance_head
-            # CAS (parent check) is what detects the race instead.
-            heads_mode = ref != "main" or os.path.isdir(
-                self._heads_dir("main")
-            )
-            next_v = (
-                max(self._latest_version(), cur["version"]) + 1
-                if heads_mode else cur["version"] + 1
-            )
+            next_v = self._next_claim_version(cur["version"], ref)
             sd_list = [dict(g) for g in cur_sd]
             if new_gen is not None and new_gen["files"]:
                 # stamped with the manifest's OWN version: a floor
@@ -2161,7 +2098,8 @@ class LakeTable:
                 # claimed version stays behind as an unreferenced
                 # orphan (removing it would punch a hole in the
                 # version walk) and the loop rebases.
-                # re-check at advance time (not heads_mode from above):
+                # re-check at advance time (not the claim-time check in
+                # _next_claim_version):
                 # a branch created mid-attempt materializes main's
                 # explicit head, and a claimed version that never
                 # advances it would be invisible to main readers
@@ -2209,15 +2147,7 @@ class LakeTable:
                     "(no per-file field IDs)"
                 )
             m = dict(prev)
-            # same claim-CAS rule as commit(): un-branched tables must
-            # claim exactly prev+1 (the claim IS the conflict check);
-            # branched tables claim global-max+1 and the head CAS in
-            # _advance_main_head detects the race instead
-            m["version"] = (
-                max(self._latest_version(), prev["version"]) + 1
-                if os.path.isdir(self._heads_dir("main"))
-                else prev["version"] + 1
-            )
+            m["version"] = self._next_claim_version(prev["version"], "main")
             m["parent"] = prev["version"]
             m["schema_ddl"] = new_ddl
             m["batch_id"] = batch_id
@@ -2262,12 +2192,7 @@ class LakeTable:
             if len(keep) == len(parts):
                 raise ValueError(f"no such column {col!r}")
             m2 = dict(prev)
-            # same claim-CAS rule as commit()/evolve_schema
-            m2["version"] = (
-                max(self._latest_version(), prev["version"]) + 1
-                if os.path.isdir(self._heads_dir("main"))
-                else prev["version"] + 1
-            )
+            m2["version"] = self._next_claim_version(prev["version"], "main")
             m2["parent"] = prev["version"]
             m2["schema_ddl"] = ", ".join(keep)
             if col in (prev.get("patch_cols") or []):

@@ -54,11 +54,6 @@ def main() -> None:
                    help="streaming latency mode: delta appends + policy "
                         "compaction instead of per-batch bucket rewrites")
     p.add_argument("--compact-max-deltas", type=int, default=8)
-    p.add_argument("--merge-strategy", choices=("window", "agg", "auto"),
-                   default="window",
-                   help="agg = update-storm hash-agg merge; auto = "
-                        "per-batch choice from the multiplicity signal "
-                        "(see operators.merge.merge_batch_agg)")
     args = p.parse_args()
 
     spark = build_session(args)
@@ -83,7 +78,6 @@ def main() -> None:
             max_files_per_trigger=args.max_files_per_trigger,
             merge_on_read=args.merge_on_read,
             compact_max_deltas=args.compact_max_deltas,
-            merge_strategy=args.merge_strategy,
         )
         results = tailer.run_available()
     else:

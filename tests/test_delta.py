@@ -259,11 +259,11 @@ def test_compact_deltas_nibble_mode(spark, tmp_path):
 def test_raw_group_deltas_share_files_and_bucket_reads_stay_exact(
     spark, tmp_path
 ):
-    """Group-shared delta files (commit group_files=True — the raw
-    plan's big-bucket-table shape): the manifest registers one file per
-    bucket GROUP in every member bucket, read() dedupes it and filters
-    rows to the requested buckets, and compaction folds a victim's rows
-    out without breaking sibling references."""
+    """Delta files shared by a GROUP of buckets (commit shard_mod=K: one
+    shard generation whose file s holds every bucket b with b % K == s):
+    each member bucket sees its shard's file, read() dedupes it and
+    filters rows to the requested buckets, and a partial compaction
+    folds one member's rows out without breaking its siblings' reads."""
     from datetime import datetime
 
     from pyspark.sql import functions as F
@@ -287,34 +287,58 @@ def test_raw_group_deltas_share_files_and_bucket_reads_stay_exact(
         BUCKET_COL, lake.bucket_expr(128, KEY_COLS)
     )
     ok = lake.commit(
-        content, [], "b0", mode="delta", lsn_range=(0, 199),
-        group_files=True,
+        content, [], "b0", mode="delta", lsn_range=(0, 199), shard_mod=2,
     )
     assert ok
+    gens = lake.snapshot()["shard_deltas"]
+    assert len(gens) == 1 and gens[0]["k"] == 2
     ent = lake.bucket_entries()
     all_files = {f for e in ent.values() for f in e["deltas"]}
-    # group_size = GROUP_SIZE = 64 at 128 buckets -> 2 groups -> 2
-    # shared files from the single input partition
+    # 2 shards of 64 buckets each -> 2 shared files from the single
+    # input partition, one per member bucket's delta view
     assert len(all_files) == 2, all_files
     assert all(len(e["deltas"]) == 1 for e in ent.values())
 
     # bucket-pruned read returns ONLY that bucket's rows despite the
     # shared file holding 64 buckets' rows
-    from pyspark.sql import functions as F
-
     full = lake.read(user_cols=True)
     assert full.count() == 200
-    by_bucket = (
-        full.withColumn("bkt", lake.bucket_expr(128, KEY_COLS))
-        .groupBy("bkt").agg(F.collect_set("conv_id").alias("cs"))
-        .collect()
-    )
+
+    def _by_bucket():
+        return {
+            int(r_.bkt): set(r_.cs)
+            for r_ in lake.read(user_cols=True)
+            .withColumn("bkt", lake.bucket_expr(128, KEY_COLS))
+            .groupBy("bkt").agg(F.collect_set("conv_id").alias("cs"))
+            .collect()
+        }
+
+    before = _by_bucket()
     # pick a bucket that actually holds rows (most of the 128 member
     # buckets of a shared file hold none at 200 convs)
-    some = max(by_bucket, key=lambda r_: len(r_.cs))
-    one = lake.read(buckets=[int(some.bkt)], user_cols=True)
-    got = {r_.conv_id for r_ in one.collect()}
-    assert got == set(some.cs) and 0 < len(got) < 200
+    some = max(before, key=lambda b_: len(before[b_]))
+    got = {
+        r_.conv_id
+        for r_ in lake.read(buckets=[some], user_cols=True).collect()
+    }
+    assert got == before[some] and 0 < len(got) < 200
+
+    # partial compaction folds ONE member bucket; the shared files stay
+    # live for the others, and every bucket's rows are unchanged
+    c = lake.compact_deltas(0, max_buckets=1)
+    assert c["applied"] and c["buckets_compacted"] == 1
+    folded = [
+        int(b) for b, e in lake.bucket_entries().items() if not e["deltas"]
+    ]
+    assert len(folded) == 1
+    assert len(lake.snapshot()["shard_deltas"]) == 1
+    assert _by_bucket() == before
+    for b in {folded[0], some}:
+        got = {
+            r_.conv_id
+            for r_ in lake.read(buckets=[b], user_cols=True).collect()
+        }
+        assert got == before.get(b, set()), b
 
     # compaction folds every over-policy bucket; state unchanged
     c = lake.compact_deltas(0)
@@ -323,6 +347,7 @@ def test_raw_group_deltas_share_files_and_bucket_reads_stay_exact(
     assert all(
         len(e["deltas"]) == 0 for e in lake.bucket_entries().values()
     )
+    assert lake.snapshot()["shard_deltas"] == []
 
 
 def test_raw_plan_inbatch_dup_lsn_never_masks_a_gap(spark, tmp_path):

@@ -1039,9 +1039,9 @@ def test_secondary_range_bucket_prunes_whole_with_delta_stats(
 def test_secondary_range_sound_with_stale_shared_delta_rows(
     spark, tmp_path
 ):
-    """ADVICE r5: a shared (group_files) delta file keeps a compacted
-    member bucket's STALE rows alive via sibling references. If that
-    bucket is later rewritten delta-free with an out-of-range winner,
+    """A shared delta file (a shard generation's file) keeps a compacted
+    member bucket's STALE rows on disk for its siblings. If that bucket
+    is later rewritten delta-free with an out-of-range winner,
     base-file pruning keyed on the bucket's own (empty) delta list
     would let the stale in-range shared row win — wrong results.
     Resolution-time val pruning must disable itself when shared delta
@@ -1050,8 +1050,8 @@ def test_secondary_range_sound_with_stale_shared_delta_rows(
     lake = LakeTable.create(
         spark, str(tmp_path / "lk"), ddl, ["ev_id"], 2, stats_col="ts"
     )
-    # one shared group-delta file carrying keys of BOTH buckets (nb=2
-    # -> one group), in-range ts, lsn 1/2
+    # one shared delta file carrying keys of BOTH buckets (a shard_mod=1
+    # generation), in-range ts
     rows = [(f"e{i}", 100 + i, f"v{i}", i + 1) for i in range(8)]
     content = (
         spark.createDataFrame(rows, f"{ddl}, {LSN_COL} long")
@@ -1060,15 +1060,16 @@ def test_secondary_range_sound_with_stale_shared_delta_rows(
         .coalesce(1)
     )
     assert lake.commit(
-        content, [], "g0", None, mode="delta", group_files=True
+        content, [], "g0", None, mode="delta", shard_mod=1
     )
     ent = lake.bucket_entries()
     assert all(len(e["deltas"]) == 1 for e in ent.values())
     shared = {f for e in ent.values() for f in e["deltas"]}
     assert len(shared) == 1  # genuinely shared across both buckets
 
-    # compact ONE member bucket: its reference drops, the sibling's
-    # stays, the immutable shared file still holds its stale rows
+    # compact ONE member bucket: its floor passes the generation, the
+    # sibling's does not, the immutable shared file still holds its
+    # stale rows
     c = lake.compact_deltas(0, max_buckets=1)
     assert c["applied"] and c["buckets_compacted"] == 1
     ent = lake.bucket_entries()
@@ -1093,11 +1094,33 @@ def test_secondary_range_sound_with_stale_shared_delta_rows(
     )
     assert lake.commit(content, [fb], "repl", None, mode="replace")
 
+    # rewrite the sibling bucket too, one row per file, WITHOUT folding
+    # the generation (a raw replace keeps its floor): the generation's
+    # stale in-range rows stay live candidates against base winners
+    # that left the window, except one key kept in range
+    sb = 1 - fb
+    sb_keys = sorted(
+        r.ev_id for r in lake.read(user_cols=True, buckets=[sb]).collect()
+    )
+    assert len(sb_keys) > 1
+    repl = [(k, 9000 + i, "moved", 200 + i) for i, k in enumerate(sb_keys)]
+    repl[0] = (sb_keys[0], 150, "kept", 200)
+    content = (
+        spark.createDataFrame(repl, f"{ddl}, {LSN_COL} long")
+        .withColumn("__deleted", F.lit(False))
+        .withColumn(BUCKET_COL, lake.bucket_expr(2, ["ev_id"]))
+    )
+    assert lake.commit(
+        content, [sb], "repl-sb", None, mode="replace",
+        max_records_per_file=1,
+    )
+    assert len(lake.snapshot()["shard_deltas"]) == 1  # live for sb
+
     # the in-range query must NOT resurrect the stale shared rows of
-    # the rewritten bucket — their true winners moved out of range
+    # either rewritten bucket — their true winners moved out of range
     got = lake.read(user_cols=True, secondary_range=(50, 200))
     got_ids = {r.ev_id for r in got.collect()}
-    assert not (got_ids & {k for k, _ in fb_keys}), got_ids
+    assert got_ids == {sb_keys[0]}, got_ids
     # and equals a plain post-resolution filter over the full read
     want = {
         r.ev_id for r in lake.read(user_cols=True).collect()

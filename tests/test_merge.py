@@ -18,7 +18,6 @@ from etl_bitcoin_spark.operators.merge import (
     KEY_COLS,
     TRANSCRIPTS_DDL,
     apply_batch,
-    lww_batch_summary,
     reconcile_schema,
     replay,
 )
@@ -62,35 +61,49 @@ def _assert_matches_oracle(lake, events_pdf):
 
 
 # ---------------------------------------------------------------- unit: LWW
-def test_lww_summary_picks_max_ts_then_lsn(spark):
-    ev = _ev(
+def _apply_one(spark, root, rows):
+    """Apply ``rows`` as ONE batch to a fresh lake; return the stored
+    per-key state as sorted (text, __lsn, __deleted) tuples — winners
+    and retained tombstones both."""
+    lake = LakeTable.create(spark, root, TRANSCRIPTS_DDL, KEY_COLS, 2)
+    assert apply_batch(lake, _ev(spark, rows), "b0")["applied"]
+    return sorted(
+        ((r["text"], r["__lsn"], r["__deleted"]) for r in lake.read().collect()),
+        key=lambda t: t[1],
+    )
+
+
+def test_lww_summary_picks_max_ts_then_lsn(spark, tmp_lake_dir):
+    got = _apply_one(
         spark,
+        tmp_lake_dir,
         [
             (1, "I", "c1", 0, "user", "a", None, "2024-01-01 00:00:05"),
             (2, "U", "c1", 0, "user", "b", None, "2024-01-01 00:00:03"),  # older ts
             (3, "U", "c1", 0, "user", "c", None, "2024-01-01 00:00:05"),  # tie -> lsn
         ],
     )
-    s = lww_batch_summary(ev).collect()
-    assert len(s) == 1 and s[0].win_text == "c" and s[0].d_lsn is None
+    assert got == [("c", 3, False)]
 
 
-def test_lww_summary_delete_then_reinsert(spark):
-    ev = _ev(
+def test_lww_summary_delete_then_reinsert(spark, tmp_lake_dir):
+    got = _apply_one(
         spark,
+        tmp_lake_dir,
         [
             (1, "I", "c1", 0, "user", "a", None, "2024-01-01 00:00:01"),
             (2, "D", "c1", 0, None, None, None, "2024-01-01 00:00:02"),
             (3, "I", "c1", 0, "user", "back", None, "2024-01-01 00:00:00"),
         ],
     )
-    s = lww_batch_summary(ev).collect()
-    assert len(s) == 1 and s[0].win_text == "back" and s[0].d_lsn == 2
+    # the reinsert wins despite its older ts; the tombstone is retained
+    assert got == [(None, 2, True), ("back", 3, False)]
 
 
-def test_lww_summary_delete_wins_when_last(spark):
-    ev = _ev(
+def test_lww_summary_delete_wins_when_last(spark, tmp_lake_dir):
+    got = _apply_one(
         spark,
+        tmp_lake_dir,
         [
             # high-ts insert, then delete with later lsn: D kills it even
             # though its ts is older (replay is lsn-ordered)
@@ -98,8 +111,7 @@ def test_lww_summary_delete_wins_when_last(spark):
             (2, "D", "c1", 0, None, None, None, "2024-01-01 00:00:00"),
         ],
     )
-    s = lww_batch_summary(ev).collect()
-    assert len(s) == 1 and s[0].win_lsn is None and s[0].d_lsn == 2
+    assert got == [(None, 2, True)]
 
 
 def test_schema_reconcile_backfills_and_orders(spark):
@@ -320,14 +332,11 @@ def test_sparse_islands_distributed_no_global_window(spark):
     assert "Window" not in d._jdf.queryExecution().executedPlan().toString()
 
 
-def test_agg_strategy_equals_window_and_oracle(spark, tmp_lake_dir, tmp_path):
-    """merge_strategy="agg" (update-storm hash-agg formulation) must
-    produce exactly the state of the default window formulation AND the
-    golden sequential replay — including deletes, ts collisions, and a
-    hot key with high per-batch multiplicity."""
+def test_hot_key_storm_matches_oracle(spark, tmp_path):
+    """A hot key with high per-batch multiplicity, deletes and ts
+    collisions, replayed in four hinted batches, converges to the
+    golden sequential replay."""
     from pyspark.sql import functions as F
-
-    from etl_bitcoin_spark.tableformat.lake import LakeTable
 
     spec = BinlogSpec(
         seed=31, n_convs=12, max_turns=8, n_events=2500,
@@ -335,89 +344,11 @@ def test_agg_strategy_equals_window_and_oracle(spark, tmp_lake_dir, tmp_path):
     )
     pdf = generate_binlog(spec)
     ev_all = spark.createDataFrame(pdf.drop(columns=["seg", "evolved"]), BINLOG_DDL)
-
-    def replay_with(strategy, root):
-        lake = LakeTable.create(spark, root, TRANSCRIPTS_DDL, KEY_COLS, 4)
-        for i in range(4):
-            lo, hi = i * 625, i * 625 + 624
-            chunk = ev_all.filter((F.col("lsn") >= lo) & (F.col("lsn") <= hi))
-            apply_batch(lake, chunk, f"{strategy}-{i}",
-                        lsn_range_hint=(lo, hi), merge_strategy=strategy)
-        return lake
-
-    lw = replay_with("window", str(tmp_path / "w"))
-    la = replay_with("agg", str(tmp_path / "a"))
-    got_w = _norm(_final(lw))
-    got_a = _norm(_final(la))
-    want = _norm(oracle_replay(pdf))
-    pd.testing.assert_frame_equal(got_w, want)
-    pd.testing.assert_frame_equal(got_a, want)
-    # stored physical state identical too (winners + retained tombstones)
-    cols = [*KEY_COLS, "__lsn", "__deleted"]
-    sw = sorted(tuple(r) for r in lw.read().select(*cols).collect())
-    sa = sorted(tuple(r) for r in la.read().select(*cols).collect())
-    assert sw == sa
-
-
-def test_auto_strategy_picks_by_multiplicity(spark, tmp_lake_dir, tmp_path):
-    """merge_strategy="auto": a ~1-event/key batch resolves to the
-    window formulation, a hot-key update storm to the hash-agg one —
-    decided per batch by the HLL multiplicity signal riding the
-    pre-job — and the converged state still equals the oracle."""
-    from pyspark.sql import functions as F
-
-    from etl_bitcoin_spark.tableformat.lake import LakeTable
-
-    # storm: 2000 events hammering <=10 keys (multiplicity ~200);
-    # normal: 500 events over ~96 keys (multiplicity ~1)
-    spec = BinlogSpec(
-        seed=77, n_convs=12, max_turns=8, n_events=2500,
-        delete_rate=0.1, hot_share=0.95, n_hot=2, ts_collision_rate=0.2,
+    lake = LakeTable.create(
+        spark, str(tmp_path / "w"), TRANSCRIPTS_DDL, KEY_COLS, 4
     )
-    pdf = generate_binlog(spec)
-    ev_all = spark.createDataFrame(
-        pdf.drop(columns=["seg", "evolved"]), BINLOG_DDL
-    )
-
-    for hinted in (True, False):
-        lake = LakeTable.create(
-            spark, str(tmp_path / f"auto_{hinted}"), TRANSCRIPTS_DDL,
-            KEY_COLS, 4,
-        )
-        picked = []
-        for i in range(4):
-            lo, hi = i * 625, i * 625 + 624
-            chunk = ev_all.filter(
-                (F.col("lsn") >= lo) & (F.col("lsn") <= hi)
-            )
-            res = apply_batch(
-                lake, chunk, f"auto-{i}",
-                lsn_range_hint=(lo, hi) if hinted else None,
-                merge_strategy="auto",
-            )
-            picked.append(res["merge_strategy"])
-        # hot_share=0.95 over 2 keys makes every 625-event batch a storm
-        assert picked == ["agg"] * 4, (hinted, picked)
-        _assert_matches_oracle(lake, pdf)
-
-    # the ~1 event/key shape resolves to window on both signal paths
-    calm = BinlogSpec(
-        seed=78, n_convs=200, max_turns=25, n_events=2000,
-        delete_rate=0.1, hot_share=0.0, n_hot=1,
-    )
-    pdf_c = generate_binlog(calm)
-    ev_c = spark.createDataFrame(
-        pdf_c.drop(columns=["seg", "evolved"]), BINLOG_DDL
-    )
-    for hinted in (True, False):
-        lake = LakeTable.create(
-            spark, str(tmp_path / f"calm_{hinted}"), TRANSCRIPTS_DDL,
-            KEY_COLS, 4,
-        )
-        res = apply_batch(
-            lake, ev_c, "calm-0",
-            lsn_range_hint=(0, 1999) if hinted else None,
-            merge_strategy="auto",
-        )
-        assert res["merge_strategy"] == "window", (hinted, res)
-        _assert_matches_oracle(lake, pdf_c)
+    for i in range(4):
+        lo, hi = i * 625, i * 625 + 624
+        chunk = ev_all.filter((F.col("lsn") >= lo) & (F.col("lsn") <= hi))
+        apply_batch(lake, chunk, f"storm-{i}", lsn_range_hint=(lo, hi))
+    _assert_matches_oracle(lake, pdf)

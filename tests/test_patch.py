@@ -186,15 +186,6 @@ def test_patch_interleaved_multi_writer_lsns(spark, tmp_path):
     _check(lake, HISTORY)
 
 
-def test_patch_forces_window_strategy(spark, tmp_path):
-    lake = _mk(spark, tmp_path, "strat")
-    r = apply_batch(
-        lake, _ev(spark, HISTORY), "b0", merge_strategy="agg",
-    )
-    assert r["merge_strategy"] == "window"
-    _check(lake, HISTORY)
-
-
 def test_patch_bootstrap_full_image_beats_older_late_patch(spark, tmp_path):
     """Snapshot rows are full images: a late partial update with an
     OLDER ts than the snapshot row cannot override its cells."""

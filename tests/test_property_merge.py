@@ -135,84 +135,3 @@ def test_random_streams_survive_rescale(
     )
     want["turn_idx"] = want["turn_idx"].astype(got["turn_idx"].dtype)
     pd.testing.assert_frame_equal(got, want)
-
-
-@st.composite
-def multiplicity_streams(draw):
-    """K keys x m events/key with interleaved lsns — per-key
-    multiplicity is the controlled property."""
-    k = draw(st.integers(min_value=3, max_value=8))
-    m_low = draw(st.integers(min_value=1, max_value=2))
-    m_high = draw(st.integers(min_value=6, max_value=12))
-    return k, m_low, m_high
-
-
-def _mult_events(k, m):
-    """m events per each of k keys, lsns interleaved across keys (the
-    storm shape: many versions of the same key inside one batch)."""
-    events = []
-    lsn = 0
-    for round_i in range(m):
-        for key_i in range(k):
-            events.append({
-                "lsn": lsn,
-                "op": "I" if round_i == 0 else "U",
-                "conv_id": f"c{key_i}",
-                "turn_idx": 0,
-                "role": "user",
-                "text": f"v{round_i}-k{key_i}",
-                "tool": None,
-                "ts": BASE + timedelta(seconds=lsn),
-            })
-            lsn += 1
-    return events
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(shape=multiplicity_streams())
-def test_auto_strategy_crossover(spark, tmp_path_factory, shape):
-    """Pins AUTO_AGG_MULTIPLICITY (operators/merge.py): auto must pick
-    "window" for calm batches (multiplicity below the constant), "agg"
-    for storms (above it), and — regardless of which side the HLL
-    multiplicity estimate lands on AT the boundary — the resulting
-    state must equal the sequential oracle on every side."""
-    from etl_bitcoin_spark.operators.merge import (
-        AUTO_AGG_MULTIPLICITY,
-        apply_batch,
-    )
-
-    k, m_low, m_high = shape
-    boundary = int(AUTO_AGG_MULTIPLICITY)
-    assert m_low < AUTO_AGG_MULTIPLICITY < m_high
-
-    for tag, m, want_strategy in [
-        ("calm", m_low, "window"),
-        ("storm", m_high, "agg"),
-        ("boundary", boundary, None),  # HLL may land either side
-    ]:
-        root = str(tmp_path_factory.mktemp(f"auto_{tag}"))
-        lake = LakeTable.create(spark, root, TRANSCRIPTS_DDL, KEY_COLS, 4)
-        events = _mult_events(k, m)
-        pdf = pd.DataFrame(events)
-        res = apply_batch(
-            lake,
-            spark.createDataFrame(pdf, BINLOG_DDL),
-            f"auto-{tag}",
-            merge_strategy="auto",
-        )
-        assert res["applied"], res
-        if want_strategy is not None:
-            assert res["merge_strategy"] == want_strategy, (tag, m, res)
-        else:
-            assert res["merge_strategy"] in ("window", "agg"), res
-        got = (
-            lake.read(user_cols=True)
-            .orderBy("conv_id", "turn_idx")
-            .toPandas()
-        )
-        want = oracle_replay(pdf)
-        assert list(got["text"]) == list(want["text"]), (tag, m)
