@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from typing import Any
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -58,14 +59,30 @@ BINLOG_DDL = (
 )
 VALUE_COLS = ["role", "text", "tool", "ts"]
 
+# DDL string -> [(name, dataType)]: parsing a DDL through an empty
+# createDataFrame costs ~90 ms of py4j per call, paid on every trigger
+_DDL_FIELDS: dict[str, list] = {}
+
+
 def reconcile_schema(df: DataFrame, ddl: str) -> DataFrame:
     """Additive schema reconciliation: project ``df`` onto the columns of
     ``ddl``, backfilling missing columns as typed nulls (the late-added
     ``tool`` column). Extra columns are dropped. Equivalent to
     ``unionByName(allowMissingColumns=True)`` against an empty frame but
-    without the union node in the plan."""
-    target = {f.name: f.dataType for f in df.sparkSession.createDataFrame([], ddl).schema}
-    have = {f.name: f.dataType for f in df.schema}
+    without the union node in the plan. A frame already in ``ddl``'s
+    (name, type) order — a stream read with that schema — comes back
+    unchanged."""
+    fields = _DDL_FIELDS.get(ddl)
+    if fields is None:
+        fields = _DDL_FIELDS[ddl] = [
+            (f.name, f.dataType)
+            for f in df.sparkSession.createDataFrame([], ddl).schema
+        ]
+    have_fields = [(f.name, f.dataType) for f in df.schema]
+    if have_fields == fields:
+        return df
+    target = dict(fields)
+    have = dict(have_fields)
     cols = []
     for name, dtype in target.items():
         if name in have:
@@ -340,6 +357,20 @@ def sparse_lsn_islands(distinct_lsns: DataFrame) -> list[list[int]]:
 RAW_LINEAGE_DRIVER_MAX = 5_000_000
 
 
+def _lsn_islands(lsns) -> list[list[int]]:
+    """Sorted [lo, hi] islands of the DISTINCT values of an lsn array
+    (numpy; duplicates collapse, gaps split)."""
+    import numpy as np
+
+    u = np.unique(np.asarray(lsns, dtype="int64"))
+    if not len(u):
+        return []
+    brk = np.flatnonzero(np.diff(u) > 1)
+    lo = np.concatenate(([u[0]], u[brk + 1]))
+    hi = np.concatenate((u[brk], [u[-1]]))
+    return [[int(a), int(b)] for a, b in zip(lo, hi)]
+
+
 def _staged_lsn_islands(spark, staged_files: list[str], n_rows: int):
     """Exact distinct-lsn islands of a freshly-staged raw delta batch,
     read from the staged files themselves — duplicates and gaps are
@@ -364,22 +395,39 @@ def _staged_lsn_islands(spark, staged_files: list[str], n_rows: int):
             max_workers=min(16, max(1, len(staged_files)))
         ) as ex:
             cols = list(ex.map(_lsns, staged_files))
-        u = (
-            np.unique(np.concatenate(cols)) if cols
-            else np.array([], dtype="int64")
+        return _lsn_islands(
+            np.concatenate(cols) if cols else np.array([], dtype="int64")
         )
-        if not len(u):
-            return []
-        brk = np.flatnonzero(np.diff(u) > 1)
-        lo = np.concatenate(([u[0]], u[brk + 1]))
-        hi = np.concatenate((u[brk], [u[-1]]))
-        return [[int(a), int(b)] for a, b in zip(lo, hi)]
     df = (
         spark.read.parquet(*staged_files)
         .select(F.col(LSN_COL).alias("lsn"))
         .distinct()
     )
     return sparse_lsn_islands(df)
+
+
+def _fits_driver(spark, events: DataFrame) -> bool:
+    """True when the optimizer's size estimate of ``events`` is at most
+    ``spark``'s ``spark.sql.autoBroadcastJoinThreshold`` — small enough
+    that Spark itself would collect it to the driver for a broadcast.
+    For a file scan (a foreachBatch micro-batch, a poll read) the
+    estimate is the input file bytes; unknown sizes (Long.MaxValue,
+    e.g. an RDD-backed frame), a disabled threshold or a session
+    without a JVM plan answer False. The threshold is read from the
+    table's session, not the frame's: a streaming query runs its
+    batches in a session cloned at query start."""
+    try:
+        limit = int(
+            spark._jsparkSession.sessionState().conf()
+            .autoBroadcastJoinThreshold()
+        )
+        size = int(
+            events._jdf.queryExecution().optimizedPlan().stats()
+            .sizeInBytes()
+        )
+    except (AttributeError, Py4JError):
+        return False
+    return 0 <= size <= limit
 
 
 def _observed_lineage(obs, ev: DataFrame, out: dict[str, Any],
@@ -461,10 +509,27 @@ def apply_batch(
     streaming tailer flips back to "summary" when the ridden
     multiplicity signal reports a storm). LINEAGE under "raw" is EXACT
     with no producer contract: the per-batch distinct-lsn islands are
-    computed from the freshly-staged delta files themselves (driver-
-    side numpy over the lsn column for normal batches, a distributed
-    job past RAW_LINEAGE_DRIVER_MAX rows), so in-batch duplicates and
-    gaps are both observed directly instead of inferred from counts.
+    computed from the staged rows themselves, so in-batch duplicates
+    and gaps are both observed directly instead of inferred from
+    counts.
+
+    "raw" has two STAGERS; the result's ``"stage"`` names the one that
+    ran. The Arrow stager takes a batch whose optimized-plan
+    ``sizeInBytes`` estimate is at most the table session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (a foreachBatch or poll
+    batch's estimate is its input file bytes; ~0.7 MB for a 33k-event
+    live-tail trigger): the guarded rows with their Spark-hashed bucket
+    column come to the driver in ONE ``toArrow()`` job, numpy derives
+    the shards, and pyarrow writes the K files (one thread each, the
+    Spark writer's physical schema). Islands and the exact
+    events-per-key multiplicity come from the collected columns. The
+    Spark stager keeps the exchange plus partitioned write described
+    above, with islands read back from the staged files (driver numpy,
+    a distributed job past RAW_LINEAGE_DRIVER_MAX rows) and an HLL
+    multiplicity sketch riding the write. It takes batches over the
+    bound or of unknown size (Long.MaxValue, e.g. RDD-backed frames),
+    ``key_bloom=True`` batches (pyarrow writes no parquet-native
+    bloom) and every "raw-scan" batch.
 
     Multi-writer note: concurrent writers with interleaved lsn ranges
     MUST pass an ``already_applied_filter`` (state.ExactlyOnceFilter) —
@@ -520,8 +585,6 @@ def apply_batch(
         # sharded "raw" layout stays the STREAMING default — its K-file
         # bound and residue membership serve read-amp and point
         # lookups between compactions, worth one sort-free exchange.
-        from pyspark.sql import Observation
-
         if delta_plan == "raw-scan":
             shard_k = 1
         else:
@@ -530,58 +593,25 @@ def apply_batch(
             shard_k = next(
                 (d for d in range(cap, 0, -1) if n_buckets % d == 0), 1
             )
-        obs = Observation()
-        content = (
-            events_as_rows(ev, patch_cols)
-            .withColumn(BUCKET_COL, lake.bucket_expr(n_buckets, KEY_COLS))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n_rows"),
-                F.approx_count_distinct(
-                    F.concat_ws("\x1f", *KEY_COLS)
-                ).alias("nk"),
-            )
+        content = events_as_rows(ev, patch_cols).withColumn(
+            BUCKET_COL, lake.bucket_expr(n_buckets, KEY_COLS)
         )
-        if delta_plan == "raw-scan":
-            pass  # no exchange: scan partitions write as-is
-        elif shard_k > 1:
-            # K | n_buckets: partitions ARE the shards (see comment)
-            content = content.repartition(shard_k, *KEY_COLS)
-        else:
-            p_conf = int(
-                lake.spark.conf.get("spark.sql.shuffle.partitions", "0")
-                or 0
-            )
-            content = content.repartition(
-                p_conf or n_buckets, *KEY_COLS
-            )
-        out: dict[str, Any] = {}
+        # Arrow stager (see docstring): a driver-sized "raw" batch is
+        # collected ONCE and staged by pyarrow — one Spark job instead
+        # of an exchange plus a partitioned write, each a fixed ~0.3 s
+        # of job setup at live-tail batch sizes. Key Blooms need the
+        # parquet-native bloom only Spark's writer embeds.
+        stage = (
+            "arrow"
+            if delta_plan == "raw" and not key_bloom
+            and _fits_driver(lake.spark, events)
+            else "spark"
+        )
+        out: dict[str, Any] = {"delta_plan": delta_plan, "stage": stage}
 
-        def _lineage(staged_files):
-            out["delta_plan"] = delta_plan
-            if not staged_files:
-                # Fully-duplicate batch: nothing staged. Don't touch the
-                # Observation — a foreachBatch plan that collapses to an
-                # empty relation (AQE empty propagation) drops the
-                # CollectMetrics node, so obs.get would see an EMPTY
-                # metrics row and raise.
-                out["events"] = 0
-                out["multiplicity"] = 1.0
-                return None, None
-            try:
-                got = obs.get
-                n_rows = int(got["n_rows"] or 0)
-                nk = int(got["nk"] or 0)
-            except Exception:
-                # Metrics node optimized out despite staged rows (defensive
-                # — not observed in practice): stay exact from the staged
-                # footers (local reads, ~0.5 ms/file).
-                import pyarrow.parquet as _pq
-
-                n_rows = sum(
-                    _pq.read_metadata(p).num_rows for p in staged_files
-                )
-                nk = 0
+        def _record(n_rows: int, distinct_keys, islands):
+            """Fill ``out`` from the staged batch (row count, distinct-
+            key and island thunks) and return the commit lineage."""
             if n_rows == 0:
                 out["events"] = 0
                 out["multiplicity"] = 1.0
@@ -593,31 +623,99 @@ def apply_batch(
                 # merge-on-write path has always used (events =
                 # hi-lo+1, so redelivered copies inside the window
                 # never inflate throughput accounting). Skips the
-                # staged-island pass entirely (r7: at 16M-row backfill
-                # batches that pass was a distributed distinct job per
-                # batch).
+                # island pass entirely (r7: at 16M-row backfill batches
+                # that pass was a distributed distinct job per batch).
                 lo_h, hi_h = int(lsn_range_hint[0]), int(lsn_range_hint[1])
                 n = hi_h - lo_h + 1
-                out["events"] = n
-                out["multiplicity"] = (n / nk) if nk else 1.0
                 out["lsn_range"] = [lo_h, hi_h]
-                return lsn_range_hint, None
-            islands = _staged_lsn_islands(
-                lake.spark, staged_files, n_rows
-            )
-            n = sum(hi_ - lo_ + 1 for lo_, hi_ in islands)
+                lineage = lsn_range_hint, None
+            else:
+                isl = islands()
+                n = sum(hi_ - lo_ + 1 for lo_, hi_ in isl)
+                out["lsn_range"] = [isl[0][0], isl[-1][1]]
+                lineage = (
+                    (tuple(isl[0]), None) if len(isl) == 1 else (None, isl)
+                )
             out["events"] = n
+            nk = distinct_keys()
             out["multiplicity"] = (n / nk) if nk else 1.0
-            out["lsn_range"] = [islands[0][0], islands[-1][1]]
-            if len(islands) == 1:
-                return tuple(islands[0]), None
-            return None, islands
+            return lineage
+
+        if stage == "arrow":
+            # exact lineage and multiplicity from the collected columns:
+            # no staged-file re-read, no HLL sketch
+            tbl = content = content.toArrow()
+
+            def _lineage(_staged_files):
+                return _record(
+                    tbl.num_rows,
+                    lambda: tbl.group_by(KEY_COLS).aggregate([]).num_rows,
+                    lambda: _lsn_islands(tbl.column(LSN_COL).to_numpy()),
+                )
+        else:
+            from pyspark.sql import Observation
+
+            obs = Observation()
+            content = content.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_rows"),
+                F.approx_count_distinct(
+                    F.concat_ws("\x1f", *KEY_COLS)
+                ).alias("nk"),
+            )
+            if delta_plan == "raw-scan":
+                pass  # no exchange: scan partitions write as-is
+            elif shard_k > 1:
+                # K | n_buckets: partitions ARE the shards (see comment)
+                content = content.repartition(shard_k, *KEY_COLS)
+            else:
+                p_conf = int(
+                    lake.spark.conf.get("spark.sql.shuffle.partitions", "0")
+                    or 0
+                )
+                content = content.repartition(
+                    p_conf or n_buckets, *KEY_COLS
+                )
+
+            def _lineage(staged_files):
+                if not staged_files:
+                    # Fully-duplicate batch: nothing staged. Don't touch
+                    # the Observation — a foreachBatch plan that
+                    # collapses to an empty relation (AQE empty
+                    # propagation) drops the CollectMetrics node, so
+                    # obs.get would see an EMPTY metrics row and raise.
+                    return _record(0, None, None)
+                try:
+                    got = obs.get
+                    n_rows = int(got["n_rows"] or 0)
+                    nk = int(got["nk"] or 0)
+                except Exception:
+                    # Metrics node optimized out despite staged rows
+                    # (defensive — not observed in practice): stay exact
+                    # from the staged footers (local reads, ~0.5
+                    # ms/file).
+                    import pyarrow.parquet as _pq
+
+                    n_rows = sum(
+                        _pq.read_metadata(p).num_rows for p in staged_files
+                    )
+                    nk = 0
+                return _record(
+                    n_rows,
+                    lambda: nk,
+                    lambda: _staged_lsn_islands(
+                        lake.spark, staged_files, n_rows
+                    ),
+                )
 
         ok = lake.commit(
             content,
             [],
             batch_id,
-            metrics={"merge_mode": "read", "delta_plan": delta_plan},
+            metrics={
+                "merge_mode": "read", "delta_plan": delta_plan,
+                "stage": stage,
+            },
             mode="delta",
             lineage_fn=_lineage,
             shard_mod=(

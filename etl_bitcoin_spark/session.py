@@ -323,6 +323,12 @@ def get_spark(
     coalesce down, not so many that task overhead dominates at small SF.
     On a 1000-executor cluster the same rule of thumb (2-3x total cores)
     applies; AQE handles the rest at runtime.
+
+    Build cost: the first build in a process also runs the engine
+    warmup (``_warm_engine``), which dominates it on small hosts —
+    34.1 s with the warmup against 7.5 s with ``SPARK_GRAFT_NO_WARMUP=1``
+    on 4 vCPUs. Set that variable when the session is wanted now and
+    the caller warms its own paths (perfbench does).
     """
     n = cores or default_parallelism()
     sp = shuffle_partitions or 2 * n
