@@ -14,6 +14,11 @@ The CDC replay is the headline: a seeded synthetic binlog (cached in
 /tmp keyed by size+seed) applied to a fresh LakeTable in 4 ordered
 micro-batches; throughput = unique events applied / wall seconds,
 including manifest commits — end-to-end, not kernel-only.
+
+Per-query timings are single cold runs: `get_spark` runs no engine
+warmup, so each includes its query shape's first-use compile and class
+loading. They are not comparable with the round-7 totals in
+`BENCH_r07*.json`, which were taken behind a session-build warmup.
 """
 
 from __future__ import annotations
@@ -200,11 +205,11 @@ def bench_stream_tail(spark) -> dict:
 
 def main() -> None:
     # Thread knee re-measured post single-sort + 16g-heap fixes
-    # (scripts/bench_knee.py -> BENCH/knee.json, 2M-event replay,
-    # best/median of 3): local[8] 169k, local[24] 195k/183k, local[32]
-    # 193k/188k ev/s. The round-1 "local[32] is 3x slower" pathology is
-    # FIXED (it was G1 young-gen ballooning at 96g heap); 24-32 threads
-    # now lead by ~15%, so the cap defaults to the full request.
+    # (BENCH/knee.json, 2M-event replay, best/median of 3): local[8]
+    # 169k, local[24] 195k/183k, local[32] 193k/188k ev/s. The round-1
+    # "local[32] is 3x slower" pathology is FIXED (it was G1 young-gen
+    # ballooning at 96g heap); 24-32 threads now lead by ~15%, so the
+    # cap defaults to the full request.
     requested = default_parallelism()
     if "SPARK_GRAFT_MASTER" in os.environ:
         # scaling harness owns the deployment shape — don't second-guess

@@ -17,300 +17,6 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-_WARMED = False
-
-
-def _warm_engine(spark) -> None:
-    """One-time per-process engine warmup (guide §1: measure steady
-    state): run one tiny synthetic job through the operator surface the
-    engine actually uses — scan, hash exchange, sort window, hash
-    aggregate, broadcast join, parquet codec, noop sink — so JVM class
-    loading, Janino codegen-compiler init, Tungsten memory-manager and
-    shuffle-system setup happen at session build, not inside the first
-    timed query. This is the session-factory analog of the replay/
-    stream warmups bench.py has always done (first streaming trigger:
-    9.9 s cold vs 2.5 s warm, measured round 5); a real deployment pays
-    this once per executor lifetime, never per query. Synthetic input
-    only (spark.range), no testdata, no results retained. Skippable via
-    SPARK_GRAFT_NO_WARMUP=1 (latency-sensitive callers that want the
-    session NOW and amortize warmup themselves)."""
-    global _WARMED
-    if _WARMED or os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
-        return
-    _WARMED = True
-    sc = spark.sparkContext
-    sc.setJobDescription("engine warmup (untimed, synthetic)")
-    try:
-        _warm_engine_body(spark)
-    except Exception:
-        pass  # warmup is best-effort; never fail session build
-    finally:
-        sc.setJobDescription(None)
-
-
-def _warm_engine_body(spark) -> None:
-    """The warmup jobs themselves — separated from the best-effort
-    wrapper so tests can run them STRICTLY (a silently-broken warm
-    block would quietly re-introduce per-query first-use cost)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    base = spark.range(0, 20000, 1, 8).select(
-        (F.col("id") % 97).alias("k"),
-        F.concat(F.lit("w_"), (F.col("id") % 13).cast("string")).alias(
-            "s"
-        ),
-        F.col("id").alias("v"),
-    )
-    w = Window.partitionBy("k").orderBy(F.col("v").desc())
-    small = spark.range(0, 97).select(
-        F.col("id").alias("k"), F.lit("x").alias("tag")
-    )
-    df = (
-        base.withColumn("rn", F.row_number().over(w))
-        .withColumn(
-            "h", F.expr("cast(conv(substr(md5(s),1,12),16,10) as bigint)")
-        )
-        .join(F.broadcast(small), "k")
-        .groupBy("k")
-        .agg(F.count("*").alias("n"), F.max("h").alias("mh"))
-    )
-    df.write.format("noop").mode("overwrite").save()
-    # parquet write+read round-trip warms the columnar IO path
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="spark_warm_")
-    try:
-        base.limit(2000).write.mode("overwrite").parquet(d)
-        spark.read.parquet(d).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    # Expression-class warm coverage (r7 second pass, guide §1):
-    # first USE of an expression class in a process pays JVM class
-    # loading + first Janino compile of a structurally-similar
-    # stage — measured 1.0-1.7 s per query shape at sf0.1, and the
-    # transfer is SHAPE-sensitive, not literal-sensitive (a
-    # projection-only stage over the same expression classes with
-    # different literals/columns cut text-profile first use
-    # 2.26 s -> 0.53 s; the same expressions buried inside a
-    # multi-stage aggregate plan transferred almost nothing). Each
-    # block below mirrors one operator-family shape the engine's
-    # library actually ships — text profiling (HOF filter lambdas,
-    # regexp_extract_all, encode/hex), MinHash-LSH dedup (lambda
-    # shingling, multi-min signature agg + collect_set, band
-    # struct-explode self-join, array_intersect verify), two-phase
-    # LWW (max_by over structs), vector similarity (zip_with/
-    # aggregate dot folds) — on synthetic rows with literals unlike
-    # any query's. No testdata, no results retained.
-    syn = spark.range(1000).select(
-        F.concat(F.lit("ax by cz dw "), F.col("id").cast("string"))
-        .alias("t")
-    ).withColumn("__a", F.split("t", " "))
-    syn.select(
-        F.size(F.expr("filter(__a, q -> q IN ('ax','by'))")).alias("a"),
-        F.size(F.expr("filter(__a, q -> q = 'cz')")).alias("b"),
-        F.size(
-            F.expr(r"regexp_extract_all(t, '[a-w]+|[5-9]+', 0)")
-        ).alias("c"),
-        F.expr("cast(conv(substr(md5(t),1,10),16,10) as bigint)")
-        .alias("d"),
-        F.length(F.encode("t", "UTF-8")).alias("e"),
-        F.lower(F.hex(F.encode(F.substring("t", 1, 3), "UTF-8")))
-        .alias("f"),
-        F.round(F.size("__a") / F.length("t"), 5).alias("g"),
-        F.when(F.size("__a") * 7 > F.length("t"), F.lit("aa"))
-        .otherwise(F.lit("bb")).alias("i"),
-    ).write.format("noop").mode("overwrite").save()
-    # MinHash-LSH dedup shape
-    p2 = 1_073_741_789
-    docs = spark.range(0, 400, 1, 4).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            *[F.concat(F.lit(f"u{j}_"),
-                       F.pmod(F.col("id") + 2 * j,
-                              F.lit(11)).cast("string"))
-              for j in range(7)]
-        ).alias("body"),
-    ).repartition("doc_id")
-    sh = docs.withColumn("__t", F.split("body", " ")).select(
-        "doc_id",
-        F.explode(F.expr(
-            "transform(sequence(1, greatest(size(__t) - 1, 1)),"
-            " i -> array_join(slice(__t, i, 2), ' '))"
-        )).alias("gram"),
-    ).distinct()
-    h = sh.select(
-        "doc_id", "gram",
-        (
-            F.expr("cast(conv(substr(md5(gram),1,10),16,10) as bigint)")
-            % F.lit(p2)
-        ).alias("hp"),
-    )
-    sigs = h.groupBy("doc_id").agg(
-        *[F.min((F.lit(a) * F.col("hp") + F.lit(a + 1)) % F.lit(p2))
-          .alias(f"g{i}") for i, a in enumerate([6, 10, 14, 22])],
-        F.count("*").alias("nsz"),
-        F.collect_set("gram").alias("__gs"),
-    ).cache()
-    try:
-        bands = sigs.select(
-            "doc_id",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(j).alias("band"),
-                    F.concat_ws(
-                        "|", F.col(f"g{2 * j}").cast("string"),
-                        F.col(f"g{2 * j + 1}").cast("string")
-                    ).alias("sig"),
-                ) for j in range(2)
-            ])).alias("bs"),
-        ).select(
-            "doc_id", F.col("bs.band").alias("band"),
-            F.col("bs.sig").alias("sig"),
-        )
-        ba, bb = bands.alias("a"), bands.alias("b")
-        cand = (
-            ba.join(
-                bb,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.sig") == F.col("b.sig"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-        da = sigs.select(F.col("doc_id").alias("doc_a"),
-                         F.col("nsz").alias("sza"),
-                         F.col("__gs").alias("__ga"))
-        db = sigs.select(F.col("doc_id").alias("doc_b"),
-                         F.col("nsz").alias("szb"),
-                         F.col("__gs").alias("__gb"))
-        isz = F.size(F.array_intersect(F.col("__ga"), F.col("__gb")))
-        (
-            cand.join(da, "doc_a").join(db, "doc_b")
-            .withColumn(
-                "jac",
-                F.round(isz / (F.col("sza") + F.col("szb") - isz), 5),
-            )
-            .filter(F.col("jac") >= 0.4)
-            .select("doc_a", "doc_b", "jac")
-            .write.format("noop").mode("overwrite").save()
-        )
-    finally:
-        sigs.unpersist()
-    # two-phase LWW shape (tombstone maxima join-back + max_by
-    # struct winner + date_format projection)
-    mod7 = F.pmod(F.col("id"), F.lit(7))
-    evw = spark.range(0, 4000, 1, 8).select(
-        F.col("id").alias("seq"),
-        F.when(mod7 == 0, "X").when(mod7 == 1, "Y").otherwise("Z")
-        .alias("kind"),
-        F.concat(F.lit("grp_"),
-                 F.pmod(F.col("id"), F.lit(41)).cast("string"))
-        .alias("g1"),
-        F.pmod(F.col("id"), F.lit(17)).cast("int").alias("g2"),
-        F.concat(F.lit("pay_"), F.col("id").cast("string")).alias("p1"),
-        F.when(F.col("id") % 5 == 0, F.lit("opt")).alias("p2"),
-        F.timestamp_seconds(F.col("id") % 999).alias("tstamp"),
-    )
-    dels = (
-        evw.filter(F.col("kind") == "X").groupBy("g1", "g2")
-        .agg(F.max("seq").alias("dseq"))
-    )
-    live = (
-        evw.filter(F.col("kind") != "X")
-        .join(dels, ["g1", "g2"], "left")
-        .filter(F.col("seq") > F.coalesce(F.col("dseq"), F.lit(-1)))
-    )
-    live.groupBy("g1", "g2").agg(
-        F.max_by(
-            F.struct("kind", "p1", "p2", "tstamp", "seq"),
-            F.struct("tstamp", "seq"),
-        ).alias("w")
-    ).select(
-        "g1", "g2", F.col("w.p1").alias("p1"),
-        F.date_format(F.col("w.tstamp"), "yyyy-MM-dd HH:mm:ss.SSS")
-        .alias("tt"),
-        F.col("w.seq").alias("s"),
-    ).write.format("noop").mode("overwrite").save()
-    # vector-similarity shape (per-row norm, broadcast query cross
-    # join, dot fold, windowed top-k)
-    vec = spark.range(0, 500, 1, 4).select(
-        F.col("id").alias("vid"),
-        F.array(*[
-            (F.pmod(F.col("id") + j, F.lit(9 + j)) + 1).cast("double")
-            for j in range(6)
-        ]).alias("vec"),
-    )
-    dotf = (
-        "aggregate(zip_with({a}, {b},"
-        " (x, y) -> cast(x as double) * cast(y as double)),"
-        " 0D, (acc, v) -> acc + v)"
-    )
-    vec = vec.withColumn(
-        "nrm", F.sqrt(F.expr(dotf.format(a="vec", b="vec")))
-    )
-    qv = vec.filter(F.col("vid") < 4).select(
-        F.col("vid").alias("qid"), F.col("vec").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    jv = vec.crossJoin(F.broadcast(qv)).withColumn(
-        "cos",
-        F.round(
-            F.expr(dotf.format(a="vec", b="qv"))
-            / (F.col("nrm") * F.col("qn")), 5,
-        ),
-    )
-    wv = Window.partitionBy("qid").orderBy(
-        F.col("cos").desc(), F.col("vid")
-    )
-    (
-        jv.withColumn("rk", F.row_number().over(wv))
-        .filter(F.col("rk") <= 2).select("qid", "vid", "cos")
-        .write.format("noop").mode("overwrite").save()
-    )
-    # Miniature end-to-end MERGE-ENGINE warm: a ~3k-event synthetic
-    # replay through a throwaway LakeTable exercises the engine's
-    # real plan shapes (raw mod-shard append, staged-island lineage,
-    # unresolved-read merge with shard-generation legs, bucket
-    # write, commit footer reads) so their whole-stage-codegen
-    # classes compile here, not inside the first production
-    # micro-batch. Same rationale as the generic warm above; a
-    # serving deployment replays a heartbeat batch at startup for
-    # exactly this reason. Synthetic rows only; the lake dir is
-    # deleted before returning.
-    from .operators.merge import KEY_COLS, TRANSCRIPTS_DDL, replay
-    from .tableformat.lake import LakeTable
-
-    mod = F.pmod(F.col("id"), F.lit(10))
-    ev = spark.range(1, 3001, 1, 8).select(
-        F.col("id").alias("lsn"),
-        F.when(mod == 0, "D").when(mod == 1, "I").otherwise("U")
-        .alias("op"),
-        F.concat(
-            F.lit("wconv_"), F.pmod(F.col("id"), F.lit(37)).cast("string")
-        ).alias("conv_id"),
-        F.pmod(F.col("id"), F.lit(25)).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.concat(F.lit("wt_"), F.col("id").cast("string")).alias("text"),
-        F.when(mod == 2, F.lit("tool_x")).alias("tool"),
-        F.timestamp_seconds(F.col("id")).alias("ts"),
-    )
-    d = tempfile.mkdtemp(prefix="spark_warm_lake_")
-    try:
-        lake = LakeTable.create(
-            spark, d, TRANSCRIPTS_DDL, KEY_COLS, 64
-        )
-        replay(lake, ev, batch_lsn_width=1000, batch_id_prefix="warm")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def get_spark(
     app_name: str = "etl_bitcoin_spark",
     cores: int | None = None,
@@ -323,12 +29,6 @@ def get_spark(
     coalesce down, not so many that task overhead dominates at small SF.
     On a 1000-executor cluster the same rule of thumb (2-3x total cores)
     applies; AQE handles the rest at runtime.
-
-    Build cost: the first build in a process also runs the engine
-    warmup (``_warm_engine``), which dominates it on small hosts —
-    34.1 s with the warmup against 7.5 s with ``SPARK_GRAFT_NO_WARMUP=1``
-    on 4 vCPUs. Set that variable when the session is wanted now and
-    the caller warms its own paths (perfbench does).
     """
     n = cores or default_parallelism()
     sp = shuffle_partitions or 2 * n
@@ -359,10 +59,7 @@ def get_spark(
         # filesystem (object stores: parallel HEADs); genuinely large
         # file sets (>512, e.g. a full-table compaction at 100 TB)
         # still flip to the distributed listing exactly as before.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LIST_JOB_THRESHOLD", "512"),
-        )
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # files.maxPartitionBytes left at 128m: at 100 TB this yields
         # ~800k scan tasks, the right granularity for 1000 executors.
@@ -412,15 +109,6 @@ def get_spark(
                 "</allocations>\n"
             )
         b = b.config("spark.scheduler.allocation.file", alloc)
-    # Experiment hook: SPARK_GRAFT_EXTRA_CONF='{"spark.x": "y"}' lets the
-    # scaling harness A/B spark confs without code edits.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if env_conf:
-        import json
-
-        for k, v in json.loads(env_conf).items():
-            b = b.config(k, str(v))
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_engine(spark)
     return spark

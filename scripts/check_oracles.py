@@ -5,12 +5,14 @@ same way a serialize-then-hash would see them).
 Usage: python scripts/check_oracles.py [query ...]   (default: all)
 """
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry  # noqa: E402
 

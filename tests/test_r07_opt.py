@@ -371,18 +371,6 @@ def test_minhash_docsets_single_upstream_exchange(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_warm_engine_body_strict(spark):
-    """The session warmup is wrapped best-effort (a failure must never
-    break session build), which means a bug in a warm block would be
-    SILENT — and each block exists to keep a measured 0.3-1.7 s of
-    expression-class first-use cost out of the first production query
-    of its shape (text profiling, MinHash-LSH, two-phase LWW, vector
-    dot folds). Run the body strictly so a broken block fails loudly."""
-    from etl_bitcoin_spark.session import _warm_engine_body
-
-    _warm_engine_body(spark)  # raises on any broken warm block
-
-
 def test_commit_claim_detects_concurrent_version(spark, tmp_path):
     """Lost-commit race regression (r7 third pass, caught by the
     bench's final_rows): writer B reads snapshot v1, writer A commits
