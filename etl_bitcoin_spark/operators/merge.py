@@ -34,8 +34,12 @@ dedup set (neo4j_csv.go:97), resume watermark (neo4j_csv.go:62-79).
 
 from __future__ import annotations
 
+import os
 from typing import Any
+from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -64,6 +68,15 @@ VALUE_COLS = ["role", "text", "tool", "ts"]
 _DDL_FIELDS: dict[str, list] = {}
 
 
+def _ddl_fields(spark, ddl: str) -> list:
+    fields = _DDL_FIELDS.get(ddl)
+    if fields is None:
+        fields = _DDL_FIELDS[ddl] = [
+            (f.name, f.dataType) for f in spark.createDataFrame([], ddl).schema
+        ]
+    return fields
+
+
 def reconcile_schema(df: DataFrame, ddl: str) -> DataFrame:
     """Additive schema reconciliation: project ``df`` onto the columns of
     ``ddl``, backfilling missing columns as typed nulls (the late-added
@@ -72,12 +85,7 @@ def reconcile_schema(df: DataFrame, ddl: str) -> DataFrame:
     without the union node in the plan. A frame already in ``ddl``'s
     (name, type) order — a stream read with that schema — comes back
     unchanged."""
-    fields = _DDL_FIELDS.get(ddl)
-    if fields is None:
-        fields = _DDL_FIELDS[ddl] = [
-            (f.name, f.dataType)
-            for f in df.sparkSession.createDataFrame([], ddl).schema
-        ]
+    fields = _ddl_fields(df.sparkSession, ddl)
     have_fields = [(f.name, f.dataType) for f in df.schema]
     if have_fields == fields:
         return df
@@ -406,28 +414,143 @@ def _staged_lsn_islands(spark, staged_files: list[str], n_rows: int):
     return sparse_lsn_islands(df)
 
 
-def _fits_driver(spark, events: DataFrame) -> bool:
-    """True when the optimizer's size estimate of ``events`` is at most
-    ``spark``'s ``spark.sql.autoBroadcastJoinThreshold`` — small enough
-    that Spark itself would collect it to the driver for a broadcast.
-    For a file scan (a foreachBatch micro-batch, a poll read) the
-    estimate is the input file bytes; unknown sizes (Long.MaxValue,
-    e.g. an RDD-backed frame), a disabled threshold or a session
-    without a JVM plan answer False. The threshold is read from the
-    table's session, not the frame's: a streaming query runs its
-    batches in a session cloned at query start."""
+# BINLOG_DDL as the Arrow types Spark's reader yields for it
+_BINLOG_ARROW = pa.schema([
+    ("lsn", pa.int64()), ("op", pa.string()), ("conv_id", pa.string()),
+    ("turn_idx", pa.int32()), ("role", pa.string()), ("text", pa.string()),
+    ("tool", pa.string()), ("ts", pa.timestamp("us", tz="UTC")),
+])
+
+
+def _wal_files(events) -> list[str] | None:
+    """Local parquet paths behind ``events``: the list itself, or the
+    ``inputFiles()`` of a frame whose optimized plan is a bare,
+    unpartitioned parquet scan read with BINLOG_DDL's schema. None for
+    anything else (a filtered or RDD-backed frame, a non-``file:``
+    URI)."""
+    if isinstance(events, list):
+        return events
+    try:
+        plan = events._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = plan.relation()
+        if (
+            rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat"
+            or len(rel.partitionSchema().fields()) != 0
+        ):
+            return None
+        if [(f.name, f.dataType) for f in events.schema] != _ddl_fields(
+            events.sparkSession, BINLOG_DDL
+        ):
+            return None
+        uris = events.inputFiles()
+    except (AttributeError, Py4JError):
+        return None
+    paths = []
+    for uri in uris:
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        paths.append(unquote(u.path))
+    return paths
+
+
+def _read_wal(paths: list[str]) -> pa.Table:
+    """The WAL files as one Arrow table in BINLOG_DDL's shape, as Spark's
+    reader gives them: a missing column is null, a tz-naive ``ts`` is
+    the same wall time in UTC. Raises on anything Spark might read
+    differently (another type, a name differing only in case)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _one(path):
+        t = pq.ParquetFile(path).read(use_threads=False)
+        names = set(t.column_names)
+        lower = {n.lower() for n in names}
+        cols = []
+        for f in _BINLOG_ARROW:
+            if f.name not in names:
+                if f.name in lower:
+                    raise ValueError(f"{path}: column {f.name} differs in case")
+                cols.append(pa.nulls(t.num_rows, f.type))
+                continue
+            c = t.column(f.name)
+            typ = c.type
+            if pa.types.is_large_string(typ):
+                c = c.cast(pa.string())
+            elif pa.types.is_timestamp(typ) and f.name == "ts":
+                if typ.unit not in ("ms", "us"):
+                    raise ValueError(f"{path}: ts unit {typ.unit}")
+                c = c.cast(f.type)  # naive reads as UTC; aware keeps its instant
+            elif typ != f.type:
+                raise ValueError(f"{path}: {f.name} is {typ}")
+            cols.append(c)
+        return pa.Table.from_arrays(cols, schema=_BINLOG_ARROW)
+
+    if not paths:
+        return _BINLOG_ARROW.empty_table()
+    with ThreadPoolExecutor(max_workers=min(8, len(paths))) as ex:
+        return pa.concat_tables(list(ex.map(_one, paths)))
+
+
+def _event_rows_arrow(t: pa.Table,
+                      patch_cols: list[str] | None) -> pa.Table:
+    """``events_as_rows`` over an Arrow table, with Spark's null
+    semantics (a null ``op`` gives a null ``__deleted`` and no cell
+    provenance)."""
+    import pyarrow.compute as pc
+
+    op = t.column("op")
+    cols = {c: t.column(c) for c in (*KEY_COLS, *VALUE_COLS)}
+    cols[LSN_COL] = t.column("lsn")
+    cols[DELETED_COL] = pc.equal(op, "D")
+    for c in patch_cols or []:
+        pts, plsn = patch_meta(c)
+        written = pc.or_kleene(
+            pc.equal(op, "I"),
+            pc.and_kleene(pc.equal(op, "U"), pc.is_valid(t.column(c))),
+        )
+        for name, src in ((pts, "ts"), (plsn, "lsn")):
+            v = t.column(src)
+            cols[name] = pc.if_else(written, v, pa.scalar(None, v.type))
+    return pa.table(cols)
+
+
+def _driver_rows(lake: LakeTable, events, guard, hwm: int, n_buckets: int,
+                 patch_cols: list[str] | None) -> pa.Table | None:
+    """The raw delta plan's Arrow stager input: the batch's WAL files,
+    when their bytes are at most the table session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (the figure Spark's own
+    file-scan estimate gives), read with pyarrow, guarded in numpy,
+    projected to stored rows and bucketed by the Murmur3 port. None
+    sends the batch to the Spark stager: no file list, over the bound,
+    a guard without ``mask``, a null lsn, or a file or key the driver
+    path does not read exactly as Spark would."""
+    files = _wal_files(events)
+    if files is None or not (guard is None or hasattr(guard, "mask")):
+        return None
     try:
         limit = int(
-            spark._jsparkSession.sessionState().conf()
+            lake.spark._jsparkSession.sessionState().conf()
             .autoBroadcastJoinThreshold()
         )
-        size = int(
-            events._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes()
-        )
-    except (AttributeError, Py4JError):
-        return False
-    return 0 <= size <= limit
+        if not 0 <= sum(os.path.getsize(p) for p in files) <= limit:
+            return None
+        t = _read_wal(files)
+        lsn = t.column("lsn")
+        if lsn.null_count:
+            return None
+        lsn = lsn.to_numpy()
+        keep = lsn > hwm if guard is None else guard.mask(lsn)
+        if not keep.all():
+            t = t.filter(pa.array(keep))
+        rows = _event_rows_arrow(t, patch_cols)
+        bucket = lake.bucket_array(rows, n_buckets, KEY_COLS)
+    except (OSError, ValueError, TypeError, pa.ArrowException, Py4JError):
+        return None
+    return rows.append_column(BUCKET_COL, pa.array(bucket, pa.int32()))
 
 
 def _observed_lineage(obs, ev: DataFrame, out: dict[str, Any],
@@ -460,7 +583,7 @@ def _observed_lineage(obs, ev: DataFrame, out: dict[str, Any],
 
 def apply_batch(
     lake: LakeTable,
-    events: DataFrame,
+    events: DataFrame | list[str],
     batch_id: str,
     already_applied_filter=None,
     assume_all_buckets: bool = False,
@@ -514,22 +637,30 @@ def apply_batch(
     counts.
 
     "raw" has two STAGERS; the result's ``"stage"`` names the one that
-    ran. The Arrow stager takes a batch whose optimized-plan
-    ``sizeInBytes`` estimate is at most the table session's
-    ``spark.sql.autoBroadcastJoinThreshold`` (a foreachBatch or poll
-    batch's estimate is its input file bytes; ~0.7 MB for a 33k-event
-    live-tail trigger): the guarded rows with their Spark-hashed bucket
-    column come to the driver in ONE ``toArrow()`` job, numpy derives
-    the shards, and pyarrow writes the K files (one thread each, the
-    Spark writer's physical schema). Islands and the exact
-    events-per-key multiplicity come from the collected columns. The
-    Spark stager keeps the exchange plus partitioned write described
-    above, with islands read back from the staged files (driver numpy,
-    a distributed job past RAW_LINEAGE_DRIVER_MAX rows) and an HLL
-    multiplicity sketch riding the write. It takes batches over the
-    bound or of unknown size (Long.MaxValue, e.g. RDD-backed frames),
-    ``key_bloom=True`` batches (pyarrow writes no parquet-native
-    bloom) and every "raw-scan" batch.
+    ran. The Arrow stager runs no Spark job. It takes a batch given as
+    WAL parquet files — ``events`` as a list of paths, or a frame that
+    is a bare parquet scan (``inputFiles()``) — whose bytes total at
+    most the table session's ``spark.sql.autoBroadcastJoinThreshold``
+    (the size Spark's file-scan estimate gives; ~1.6 MB for a
+    40k-event live-tail trigger). pyarrow reads the files on the driver
+    in BINLOG_DDL's shape, the guard runs as a numpy mask
+    (``ExactlyOnceFilter.mask``, or ``lsn > hwm`` without one),
+    ``events_as_rows`` projects in Arrow and ``LakeTable.bucket_array``
+    (a bit-exact port of Spark's Murmur3 ``hash``) buckets the rows;
+    pyarrow then writes the K shard files (one thread each, the Spark
+    writer's physical schema). Islands and the exact events-per-key
+    multiplicity come from the driver's columns. The Spark stager keeps
+    the exchange plus partitioned write described above, with islands
+    read back from the staged files (driver numpy, a distributed job
+    past RAW_LINEAGE_DRIVER_MAX rows) and an HLL multiplicity sketch
+    riding the write. It takes batches over the bound, frames that are
+    not bare scans (e.g. RDD-backed or filtered), a guard without
+    ``mask``, anything the driver read cannot take exactly as Spark
+    would (a non-``file:`` URI, a column type Spark might read
+    differently, a null lsn, a key type the hash port lacks),
+    ``key_bloom=True`` batches (pyarrow writes no parquet-native bloom)
+    and every "raw-scan" batch. A path list bound for Spark is read
+    with BINLOG_DDL's schema.
 
     Multi-writer note: concurrent writers with interleaved lsn ranges
     MUST pass an ``already_applied_filter`` (state.ExactlyOnceFilter) —
@@ -548,15 +679,31 @@ def apply_batch(
     hwm = snap["lineage"]["hwm"]
     patch_cols = snap.get("patch_cols") or None
 
-    ev = reconcile_schema(events, BINLOG_DDL)
-    if already_applied_filter is not None:
-        # Exact guard (HWM fast-path + Bloom + applied-range membership):
-        # late batches survive, true duplicates die.
-        ev = already_applied_filter(ev)
-    else:
-        # Ordered-replay fast path: batches are guaranteed ordered LSN
-        # ranges, so everything at or below the HWM is a duplicate.
-        ev = ev.filter(F.col("lsn") > F.lit(hwm))
+    # Arrow stager (see docstring): a driver-sized "raw" batch is read,
+    # guarded and bucketed on the driver — no Spark job at all. Key
+    # Blooms need the parquet-native bloom only Spark's writer embeds.
+    tbl = (
+        _driver_rows(lake, events, already_applied_filter, hwm, n_buckets,
+                     patch_cols)
+        if merge_mode == "read" and delta_plan == "raw" and not key_bloom
+        else None
+    )
+    if tbl is None:
+        if isinstance(events, list):
+            events = (
+                lake.spark.read.schema(BINLOG_DDL).parquet(*events)
+                if events else lake.spark.createDataFrame([], BINLOG_DDL)
+            )
+        ev = reconcile_schema(events, BINLOG_DDL)
+        if already_applied_filter is not None:
+            # Exact guard (HWM fast-path + Bloom + applied-range
+            # membership): late batches survive, true duplicates die.
+            ev = already_applied_filter(ev)
+        else:
+            # Ordered-replay fast path: batches are guaranteed ordered
+            # LSN ranges, so everything at or below the HWM is a
+            # duplicate.
+            ev = ev.filter(F.col("lsn") > F.lit(hwm))
 
     if merge_mode == "read" and delta_plan in ("raw", "raw-scan"):
         # Sub-second fast path: NO sort, NO resolution window — the
@@ -593,20 +740,7 @@ def apply_batch(
             shard_k = next(
                 (d for d in range(cap, 0, -1) if n_buckets % d == 0), 1
             )
-        content = events_as_rows(ev, patch_cols).withColumn(
-            BUCKET_COL, lake.bucket_expr(n_buckets, KEY_COLS)
-        )
-        # Arrow stager (see docstring): a driver-sized "raw" batch is
-        # collected ONCE and staged by pyarrow — one Spark job instead
-        # of an exchange plus a partitioned write, each a fixed ~0.3 s
-        # of job setup at live-tail batch sizes. Key Blooms need the
-        # parquet-native bloom only Spark's writer embeds.
-        stage = (
-            "arrow"
-            if delta_plan == "raw" and not key_bloom
-            and _fits_driver(lake.spark, events)
-            else "spark"
-        )
+        stage = "spark" if tbl is None else "arrow"
         out: dict[str, Any] = {"delta_plan": delta_plan, "stage": stage}
 
         def _record(n_rows: int, distinct_keys, islands):
@@ -641,10 +775,10 @@ def apply_batch(
             out["multiplicity"] = (n / nk) if nk else 1.0
             return lineage
 
-        if stage == "arrow":
-            # exact lineage and multiplicity from the collected columns:
+        if tbl is not None:
+            # exact lineage and multiplicity from the driver's columns:
             # no staged-file re-read, no HLL sketch
-            tbl = content = content.toArrow()
+            content = tbl
 
             def _lineage(_staged_files):
                 return _record(
@@ -656,7 +790,9 @@ def apply_batch(
             from pyspark.sql import Observation
 
             obs = Observation()
-            content = content.observe(
+            content = events_as_rows(ev, patch_cols).withColumn(
+                BUCKET_COL, lake.bucket_expr(n_buckets, KEY_COLS)
+            ).observe(
                 obs,
                 F.count(F.lit(1)).alias("n_rows"),
                 F.approx_count_distinct(

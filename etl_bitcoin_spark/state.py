@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tableformat.lake import _merge_ranges
+
 _MIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
 
@@ -74,6 +76,9 @@ class LsnBloom:
         self.n_hashes = n_hashes
         self.covered_lo = covered_lo
         self.bits = np.zeros(n_bits // 8, dtype=np.uint8)
+        # lineage_mark() of the applied history the bits hold; a saved
+        # filter whose mark differs from the manifest's is stale
+        self.covers: tuple[int, int] | None = None
 
     def _positions(self, lsns: np.ndarray) -> np.ndarray:
         h1 = _mix64(lsns.astype(np.uint64))
@@ -134,7 +139,9 @@ class LsnBloom:
             tmp,
             bits=self.bits,
             meta=np.array(
-                [self.n_bits, self.n_hashes, self.covered_lo], dtype=np.int64
+                [self.n_bits, self.n_hashes, self.covered_lo,
+                 *(self.covers or ())],
+                dtype=np.int64,
             ),
         )
         os.rename(tmp, path)  # np.load sniffs the zip magic, any extension
@@ -147,6 +154,8 @@ class LsnBloom:
         covered_lo = meta[2] if len(meta) > 2 else 0
         b = cls(n_bits=n_bits, n_hashes=n_hashes, covered_lo=covered_lo)
         b.bits = z["bits"]
+        if len(meta) > 4:
+            b.covers = (meta[3], meta[4])
         return b
 
     @classmethod
@@ -164,6 +173,14 @@ class LsnBloom:
         return b
 
 
+def lineage_mark(hwm: int, ranges: list[list[int]]) -> tuple[int, int]:
+    """(HWM, applied lsn count) of a lineage. Applied history only
+    grows, so two marks of one table are equal exactly when they name
+    the same applied set — including a late batch below the HWM, which
+    leaves the HWM alone but not the count."""
+    return int(hwm), sum(int(hi) - int(lo) + 1 for lo, hi in ranges)
+
+
 class ExactlyOnceFilter:
     """Composable already-applied filter for ``apply_batch``."""
 
@@ -171,6 +188,27 @@ class ExactlyOnceFilter:
         self.hwm = lineage["hwm"]
         self.ranges = lineage["applied_ranges"]
         self.bloom = bloom
+
+    def mask(self, lsn: np.ndarray) -> np.ndarray:
+        """``__call__`` over a numpy lsn array: True where the guard
+        keeps the row. Same three layers — HWM fast path, Bloom, exact
+        applied-range membership — for a batch already on the driver."""
+        lsn = np.asarray(lsn, dtype=np.int64)
+        if not self.ranges:
+            return np.ones(len(lsn), dtype=bool)
+        if len(self.ranges) == 1 and self.ranges[0][1] == self.hwm:
+            return (lsn > self.hwm) | (lsn < self.ranges[0][0])
+        keep = lsn > self.hwm
+        old = np.flatnonzero(~keep)
+        if len(old):
+            sus = lsn[old]
+            rng = np.array(_merge_ranges(self.ranges), dtype=np.int64)
+            i = np.searchsorted(rng[:, 0], sus, side="right") - 1
+            dup = (i >= 0) & (sus <= rng[np.maximum(i, 0), 1])
+            if self.bloom is not None:
+                dup &= self.bloom.might_contain_many(sus)
+            keep[old] = ~dup
+        return keep
 
     def __call__(self, ev: DataFrame) -> DataFrame:
         """Exact already-applied filter. Splits the batch on the HWM:

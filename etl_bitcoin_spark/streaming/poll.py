@@ -7,8 +7,9 @@ the batch body. ``PollTailer`` is the reference's own poll shape
 (cmd/main.go:38 SendInput loop) rebuilt on the SAME engine surface: list
 new WAL segment files, apply them through the identical guard/merge/
 compaction body (BinlogTailer._apply_df), advance a cursor file. No
-Spark streaming query, no trigger floor — each iteration is exactly one
-Spark job chain.
+Spark streaming query, no trigger floor — each iteration hands its
+segment paths to apply_batch, whose raw delta plan stages a
+driver-sized batch without any Spark job.
 
 Exactly-once without Spark's checkpoint, layered:
 
@@ -39,7 +40,6 @@ import time
 import uuid
 from typing import Any
 
-from ..operators.merge import BINLOG_DDL
 from .tailer import BinlogTailer
 
 
@@ -87,10 +87,10 @@ class PollTailer(BinlogTailer):
         if not segs:
             return None
         take = segs[: self.max_files_per_trigger]
-        df = self.spark.read.schema(BINLOG_DDL).parquet(
-            *[os.path.join(self.binlog_dir, n) for n in take]
+        self._apply_df(
+            [os.path.join(self.binlog_dir, n) for n in take],
+            f"poll-{self.ns}-{take[0]}-{take[-1]}",
         )
-        self._apply_df(df, f"poll-{self.ns}-{take[0]}-{take[-1]}")
         self._write_cursor(take[-1])
         return self.batch_results[-1]
 

@@ -19,21 +19,26 @@ Exactly-once end to end: Spark's checkpoint gives deterministic
 ``tail-{batch_id}``, so a replayed foreachBatch is a metadata no-op —
 the same contract as DeltaSink's txnVersion pattern, built natively.
 
-At cluster scale this is the same code: the file source becomes a Kafka
-/ cloud-storage listing source, ``maxFilesPerTrigger`` tunes batch size
-against end-to-end latency, and each micro-batch's two key-partitioned
-shuffles spread over all executors.
+Driver staging: each trigger looks its WAL files up in the checkpoint's
+file-source log (``_batch_files`` — the record Spark's own ``getBatch``
+replays after a crash), so ``apply_batch``'s raw delta plan can read a
+driver-sized batch with pyarrow and run no Spark job for it. Larger
+batches, other plans and an unreadable log run on Spark, where the file
+source becomes a Kafka / cloud-storage listing source at cluster scale
+and ``maxFilesPerTrigger`` tunes batch size against end-to-end latency.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 
 from ..operators.merge import BINLOG_DDL, apply_batch
-from ..state import ExactlyOnceFilter, LsnBloom
+from ..state import ExactlyOnceFilter, LsnBloom, lineage_mark
 from ..tableformat.lake import LakeTable
 
 # delta_plan="auto" storm threshold: raw stays engaged while the
@@ -150,7 +155,7 @@ class BinlogTailer:
         self.batch_results: list[dict[str, Any]] = []
 
     # ------------------------------------------------------------- state
-    def _load_bloom(self) -> LsnBloom | None:
+    def _load_bloom(self, lineage: dict | None = None) -> LsnBloom | None:
         if not self.use_bloom:
             return None
         # In-memory across batches (this tailer is the only writer of its
@@ -158,17 +163,25 @@ class BinlogTailer:
         # npz round-trip per micro-batch.
         if self._bloom is not None:
             return self._bloom
+        if lineage is None:
+            lineage = self.lake.lineage(ref=self.ref)
+        mark = lineage_mark(lineage["hwm"], lineage["applied_ranges"])
         if os.path.exists(self.bloom_path):
             self._bloom = LsnBloom.load(self.bloom_path)
-        else:
-            # rebuild from manifest lineage (crash-safe recovery path)
+        if self._bloom is None or self._bloom.covers != mark:
+            # No file, or a stale one: a crash lost the newest async
+            # save (or the file predates the mark). Its covered window
+            # would vouch for lsns whose bits it never set, so rebuild
+            # from manifest lineage (the crash-safe recovery path).
             self._bloom = LsnBloom.rebuild_from_ranges(
-                self.lake.lineage()["applied_ranges"]
+                lineage["applied_ranges"]
             )
+            self._bloom.covers = mark
         return self._bloom
 
     def _save_bloom(
-        self, bloom: LsnBloom, lsn_range, dense_tail: bool = False
+        self, bloom: LsnBloom, lsn_range, covers: tuple[int, int],
+        dense_tail: bool = False,
     ) -> None:
         if bloom is None or lsn_range is None:
             return
@@ -181,7 +194,9 @@ class BinlogTailer:
         # SNAPSHOT — never the live array the next batch keeps inserting
         # into — because a torn on-disk bloom would yield false negatives
         # after a crash-reload (a duplicate sneaking past layer 2 AND
-        # skipping layer 3). Losing the save entirely is safe: recovery
+        # skipping layer 3). The save records the lineage mark its bits
+        # cover, so losing it is safe: the next load finds no file, or
+        # an older file whose mark no longer matches the manifest, and
         # rebuilds from manifest lineage.
         if dense_tail:
             # Ordered-stream steady state (r7, guide §1.2: don't compute
@@ -201,6 +216,7 @@ class BinlogTailer:
         else:
             bloom.advance_window(int(lsn_range[1]))
             bloom.add_range(int(lsn_range[0]), int(lsn_range[1]))
+        bloom.covers = covers
         os.makedirs(self.checkpoint_dir, exist_ok=True)
         snap = LsnBloom(
             n_bits=bloom.n_bits,
@@ -208,6 +224,7 @@ class BinlogTailer:
             covered_lo=bloom.covered_lo,
         )
         snap.bits = bloom.bits.copy()
+        snap.covers = covers
         if self._bg is None:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -250,13 +267,45 @@ class BinlogTailer:
 
     # -------------------------------------------------------------- run
     def _apply(self, batch_df, batch_id: int) -> None:
-        self._apply_df(batch_df, f"tail-{self.ns}-{batch_id}")
+        files = self._batch_files(batch_id)
+        self._apply_df(
+            batch_df if files is None else files,
+            f"tail-{self.ns}-{batch_id}",
+        )
 
-    def _apply_df(self, batch_df, commit_id: str) -> None:
+    def _batch_files(self, batch_id: int) -> list[str] | None:
+        """Local paths of micro-batch ``batch_id``'s WAL files, or None
+        when the checkpoint cannot say (the batch frame then runs on
+        Spark). A foreachBatch frame is a LogicalRDD that no longer
+        lists its input files, so they come from the checkpoint: the
+        file source's ``logOffset`` range ``(offsets/<id-1>,
+        offsets/<id>]`` and that range's entries in ``sources/0`` —
+        the record Spark's ``getBatch`` itself reads, so a batch
+        replayed after a crash resolves to the same files."""
+        try:
+            end = _source_offset(self.checkpoint_dir, batch_id)
+            start = (
+                _source_offset(self.checkpoint_dir, batch_id - 1)
+                if batch_id > 0 else -1
+            )
+            log_dir = os.path.join(self.checkpoint_dir, "sources", "0")
+            paths = []
+            for n in range(start + 1, end + 1):
+                for e in _source_log_entries(log_dir, n):
+                    u = urlparse(e["path"])
+                    if u.scheme != "file":
+                        return None
+                    paths.append(unquote(u.path))
+        except (OSError, ValueError, KeyError, TypeError, IndexError):
+            return None
+        return paths
+
+    def _apply_df(self, events, commit_id: str) -> None:
         """The per-batch body (guards -> merge -> compaction policy ->
         view relay), keyed by an explicit idempotent commit id — shared
         by the Structured Streaming trigger (_apply) and the poll-loop
-        tailer (streaming.poll.PollTailer)."""
+        tailer (streaming.poll.PollTailer). ``events`` is the batch
+        frame or its list of WAL parquet paths (see apply_batch)."""
         from ..tableformat.lake import CommitConflict
 
         # Trigger jobs run in the weighted "live" FAIR pool (8x the
@@ -276,12 +325,13 @@ class BinlogTailer:
         # failing the stream — bounded, because back-to-back losses
         # mean a misconfigured second writer, which SHOULD surface.
         for attempt in range(3):
-            bloom = self._load_bloom()
-            guard = ExactlyOnceFilter(self.lake.lineage(ref=self.ref), bloom)
+            lineage = self.lake.lineage(ref=self.ref)
+            bloom = self._load_bloom(lineage)
+            guard = ExactlyOnceFilter(lineage, bloom)
             try:
                 res = apply_batch(
                     self.lake,
-                    batch_df,
+                    events,
                     commit_id,
                     already_applied_filter=guard,
                     assume_all_buckets=self.assume_all_buckets,
@@ -331,7 +381,14 @@ class BinlogTailer:
                     and lo == guard.hwm + 1
                 )
             ) and res.get("events") == hi - lo + 1
-            self._save_bloom(bloom, res["lsn_range"], dense_tail=dense_tail)
+            # the post-apply lineage: this batch's events are lsns the
+            # guard found unapplied
+            hwm0, n0 = lineage_mark(guard.hwm, guard.ranges)
+            self._save_bloom(
+                bloom, res["lsn_range"],
+                (max(hwm0, hi), n0 + int(res["events"])),
+                dense_tail=dense_tail,
+            )
         if (
             self.merge_on_read
             and self.compact_max_deltas is not None
@@ -437,7 +494,9 @@ class BinlogTailer:
         deployment shape for a live WAL tail. Runs until ``until_events``
         have been applied (or timeout), then stops and returns per-batch
         results plus the streaming progress records for latency
-        percentiles."""
+        percentiles. A driver-staged trigger never executes its batch
+        frame, so its progress record reads ``numInputRows`` 0: count
+        events from ``batch_results``."""
         import time as _time
 
         q = (
@@ -461,3 +520,34 @@ class BinlogTailer:
             "batch_results": self.batch_results,
             "progress": progress,
         }
+
+
+def _source_offset(checkpoint_dir: str, batch_id: int) -> int:
+    """The file source's ``logOffset`` in ``offsets/<batch_id>``: a
+    ``v1`` line, the batch metadata line, then one offset per source."""
+    with open(os.path.join(checkpoint_dir, "offsets", str(batch_id))) as f:
+        lines = f.read().splitlines()
+    if lines[0] != "v1" or len(lines) != 3:
+        raise ValueError("unexpected offset log format")
+    return int(json.loads(lines[2])["logOffset"])
+
+
+def _source_log_entries(log_dir: str, n: int) -> list[dict]:
+    """Entries of file-source log batch ``n``: its own file ``<n>``, or
+    the ``<c>.compact`` file (c >= n) that folded it in."""
+    path = os.path.join(log_dir, str(n))
+    if not os.path.exists(path):
+        compacts = sorted(
+            int(f.split(".")[0]) for f in os.listdir(log_dir)
+            if f.endswith(".compact") and not f.startswith(".")
+        )
+        c = next((c for c in compacts if c >= n), None)
+        if c is None:
+            raise FileNotFoundError(path)
+        path = os.path.join(log_dir, f"{c}.compact")
+    with open(path) as f:
+        lines = f.read().splitlines()
+    if not lines or lines[0] != "v1":
+        raise ValueError("unexpected source log format")
+    entries = [json.loads(ln) for ln in lines[1:] if ln]
+    return [e for e in entries if e["batchId"] == n]

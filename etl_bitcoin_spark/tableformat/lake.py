@@ -89,6 +89,7 @@ import time
 import uuid
 from typing import Any
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -381,7 +382,7 @@ def _stage_spark(df: DataFrame, out_dir: str, part_col: str,
 
 def _stage_arrow(tbl, out_dir: str, part_col: str, shard_mod: int | None,
                  compression: str | None) -> None:
-    """Stage a driver-collected batch (a ``pyarrow.Table`` carrying
+    """Stage a driver-side batch (a ``pyarrow.Table`` carrying
     BUCKET_COL) in the layout Spark's partitioned writer gives it: one
     ``<part_col>=<v>/`` directory per bucket (or per mod-shard ``bucket
     % shard_mod``) holding one parquet file without the partition
@@ -390,8 +391,6 @@ def _stage_arrow(tbl, out_dir: str, part_col: str, shard_mod: int | None,
     compact alike. One thread per file: parquet encode releases the
     GIL."""
     from concurrent.futures import ThreadPoolExecutor
-
-    import numpy as np
 
     os.makedirs(out_dir, exist_ok=True)
     part = tbl.column(BUCKET_COL).to_numpy()
@@ -417,6 +416,116 @@ def _stage_arrow(tbl, out_dir: str, part_col: str, shard_mod: int | None,
     if vals:
         with ThreadPoolExecutor(max_workers=min(16, len(vals))) as ex:
             list(ex.map(_write, vals))
+
+
+# Spark's Murmur3 (``F.hash``: Murmur3Hash over Murmur3_x86_32), ported to
+# numpy for LakeTable.bucket_array. All arithmetic is uint32 and wraps
+# as Java's int does.
+_MM3_SEED = 42
+_MM3_C1 = np.uint32(0xCC9E2D51)
+_MM3_C2 = np.uint32(0x1B873593)
+# keys longer than this many 4-byte blocks (8 KiB) are left to Spark:
+# the block loop below runs once per block index
+_MM3_MAX_BLOCKS = 2048
+
+
+def _rotl32(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+
+def _mm3_mix_k1(k1: np.ndarray) -> np.ndarray:
+    return _rotl32(k1 * _MM3_C1, 15) * _MM3_C2
+
+
+def _mm3_mix_h1(h1: np.ndarray, k1: np.ndarray) -> np.ndarray:
+    return _rotl32(h1 ^ k1, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+
+
+def _mm3_fmix(h1: np.ndarray, length) -> np.ndarray:
+    h1 = h1 ^ np.asarray(length, dtype=np.uint32)
+    h1 = (h1 ^ (h1 >> np.uint32(16))) * np.uint32(0x85EBCA6B)
+    h1 = (h1 ^ (h1 >> np.uint32(13))) * np.uint32(0xC2B2AE35)
+    return h1 ^ (h1 >> np.uint32(16))
+
+
+def _mm3_bytes(arr: pa.Array, seed: np.ndarray) -> np.ndarray:
+    """``hashUnsafeBytes`` per value of a string array: 4-byte
+    little-endian blocks of its UTF-8 bytes, then each tail byte SIGNED
+    as its own block, then fmix with the byte length. Vectorized over
+    rows, looping over block index (rows sorted by length, so each pass
+    is a prefix)."""
+    bufs = arr.buffers()
+    offsets = np.frombuffer(bufs[1], dtype=np.int32)[
+        arr.offset: arr.offset + len(arr) + 1
+    ].astype(np.int64)
+    data = (
+        np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
+        else np.zeros(0, dtype=np.uint8)
+    )
+    start = offsets[:-1]
+    length = offsets[1:] - start
+    nblk = length // 4
+    if len(nblk) and int(nblk.max()) > _MM3_MAX_BLOCKS:
+        raise TypeError("key longer than the driver hash covers")
+    order = np.argsort(-nblk, kind="stable")
+    h = seed[order].copy()
+    s, nb, ln = start[order], nblk[order], length[order]
+    for j in range(int(nb[0]) if len(nb) else 0):
+        m = int(np.searchsorted(-nb, -j, side="left"))  # rows with nb > j
+        p = s[:m] + 4 * j
+        word = (
+            data[p].astype(np.uint32)
+            | (data[p + 1].astype(np.uint32) << np.uint32(8))
+            | (data[p + 2].astype(np.uint32) << np.uint32(16))
+            | (data[p + 3].astype(np.uint32) << np.uint32(24))
+        )
+        h[:m] = _mm3_mix_h1(h[:m], _mm3_mix_k1(word))
+    tail = ln - 4 * nb
+    for t in range(3):
+        i = np.flatnonzero(tail > t)
+        if len(i):
+            b = data[s[i] + 4 * nb[i] + t].view(np.int8).astype(np.int32)
+            h[i] = _mm3_mix_h1(h[i], _mm3_mix_k1(b.view(np.uint32)))
+    h = _mm3_fmix(h, ln.astype(np.uint32))
+    out = np.empty_like(h)
+    out[order] = h
+    return out
+
+
+def spark_hash(columns: list) -> np.ndarray:
+    """Spark's ``hash(c1, c2, ...)`` over Arrow columns, as int32: seed
+    42, each column's hash seeding the next, a null cell leaving the
+    running hash unchanged. Covers strings (``hashUnsafeBytes``),
+    8/16/32-bit ints (``hashInt``) and 64-bit ints (``hashLong``);
+    other types raise TypeError."""
+    n = len(columns[0])
+    h = np.full(n, _MM3_SEED, dtype=np.uint32)
+    if n == 0:  # an empty array may carry no offsets buffer
+        return h.view(np.int32)
+    for col in columns:
+        arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+        t = arr.type
+        if pa.types.is_string(t):
+            new = _mm3_bytes(arr, h)
+        elif pa.types.is_int8(t) or pa.types.is_int16(t) or pa.types.is_int32(t):
+            v = arr.fill_null(0).to_numpy().astype(np.int32).view(np.uint32)
+            new = _mm3_fmix(_mm3_mix_h1(h, _mm3_mix_k1(v)), 4)
+        elif pa.types.is_int64(t):
+            v = arr.fill_null(0).to_numpy().view(np.uint64)
+            lo = (v & np.uint64(0xFFFFFFFF)).astype(np.uint32)
+            hi = (v >> np.uint64(32)).astype(np.uint32)
+            new = _mm3_fmix(
+                _mm3_mix_h1(_mm3_mix_h1(h, _mm3_mix_k1(lo)), _mm3_mix_k1(hi)),
+                8,
+            )
+        else:
+            raise TypeError(f"no driver hash for key type {t}")
+        if arr.null_count:
+            new = np.where(
+                arr.is_valid().to_numpy(zero_copy_only=False), new, h
+            )
+        h = new
+    return h.view(np.int32)
 
 
 class CommitConflict(RuntimeError):
@@ -1506,8 +1615,19 @@ class LakeTable:
         return df
 
     # --------------------------------------------------------------- commit
-    def bucket_expr(self, n_buckets: int, key_cols: list[str]):
+    @staticmethod
+    def bucket_expr(n_buckets: int, key_cols: list[str]):
         return F.pmod(F.hash(*key_cols), F.lit(n_buckets)).cast("int")
+
+    @staticmethod
+    def bucket_array(tbl: pa.Table, n_buckets: int,
+                     key_cols: list[str]) -> np.ndarray:
+        """``bucket_expr`` evaluated on the driver over a
+        ``pyarrow.Table``: the same int32 bucket per row, bit for bit
+        (``spark_hash``, then ``pmod``). Raises TypeError for a key type
+        the port does not cover."""
+        h = spark_hash([tbl.column(c) for c in key_cols])
+        return np.mod(h.astype(np.int64), n_buckets).astype(np.int32)
 
     def commit(
         self,
@@ -1577,8 +1697,8 @@ class LakeTable:
         replace content is a fully-RESOLVED read at that version —
         raw base rewrites (compact_files) carry the old floor forward.
 
-        ``new_content`` may also be a ``pyarrow.Table`` already collected
-        on the driver (the raw delta plan's Arrow stager): pyarrow then
+        ``new_content`` may also be a ``pyarrow.Table`` built on the
+        driver (the raw delta plan's Arrow stager): pyarrow then
         writes the same ``<partition>=<v>/`` layout and physical types
         (_stage_arrow) in place of Spark's partitioned writer; footer
         stats, registration, CAS and lineage are shared. It cannot carry

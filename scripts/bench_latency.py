@@ -85,10 +85,17 @@ def run_mode(spark, wal: str, merge_on_read: bool,
             p if isinstance(p, dict) else json.loads(p.json)
             for p in out["progress"]
         ]
-        # keep batches that actually processed rows; the FIRST batch pays
-        # JIT + codegen + parquet-reader warmup and is reported
-        # separately, not inside the steady-state percentiles
-        rows_batches = [p for p in prog if p.get("numInputRows", 0) > 0]
+        # keep batches that applied events, keyed by batch id: a fresh
+        # checkpoint numbers batches from 0 in batch_results order, and
+        # progress numInputRows reads 0 for a driver-staged trigger (its
+        # batch frame never runs). The FIRST batch pays JIT + codegen +
+        # parquet-reader warmup and is reported separately, not inside
+        # the steady-state percentiles
+        by_id = {int(p["batchId"]): p for p in prog}
+        rows_batches = [
+            by_id[i] for i, r in enumerate(out["batch_results"])
+            if r.get("events") and i in by_id
+        ]
         all_trig = [
             p["durationMs"]["triggerExecution"] / 1000 for p in rows_batches
         ]

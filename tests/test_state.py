@@ -180,3 +180,52 @@ def test_sparse_late_batch_does_not_swallow_gap_lsns(spark, tmp_path):
     got = {x.conv_id for x in lake.read(user_cols=True).collect()}
     assert "k11" in got
     assert lake.lineage()["applied_ranges"] == [[0, 12]]
+
+
+def test_stale_bloom_file_is_rebuilt_not_trusted(spark, tmp_path):
+    """A crash loses the newest async Bloom save and leaves the previous
+    file. On sparse history that file's covered window reaches lsns it
+    never set, so trusting it re-applies a redelivered segment. The
+    saved lineage mark no longer matches the manifest, so a new tailer
+    rebuilds the filter instead and the redelivery applies nothing."""
+    import os
+    import shutil
+
+    from etl_bitcoin_spark.gen import BinlogSpec, generate_binlog, write_segments
+    from etl_bitcoin_spark.operators.merge import KEY_COLS, TRANSCRIPTS_DDL
+    from etl_bitcoin_spark.streaming import PollTailer
+    from etl_bitcoin_spark.tableformat import LakeTable
+
+    pdf = generate_binlog(
+        BinlogSpec(seed=17, n_convs=40, n_events=1200, n_segments=6)
+    )
+    segs = write_segments(pdf, str(tmp_path / "src"))
+    wal = tmp_path / "wal"
+    wal.mkdir()
+    lake = LakeTable.create(
+        spark, str(tmp_path / "lake"), TRANSCRIPTS_DDL, KEY_COLS, 4
+    )
+    ckpt = str(tmp_path / "ckpt")
+    bloom = os.path.join(ckpt, "lsn_bloom.state")
+    stale = str(tmp_path / "bloom.copy")
+
+    def publish(i, name=None):
+        shutil.copy(segs[i], wal / (name or os.path.basename(segs[i])))
+
+    def tail():
+        return PollTailer(
+            spark, str(wal), lake, ckpt, max_files_per_trigger=1,
+            merge_on_read=True, delta_plan="raw", compact_max_deltas=None,
+        ).run_available()
+
+    for i in (0, 1, 3):  # segment 2 held back: history has a gap
+        publish(i)
+    tail()
+    assert len(lake.lineage()["applied_ranges"]) > 1
+    shutil.copy(bloom, stale)
+    publish(4)
+    assert tail()[-1]["events"] > 0
+    shutil.copy(stale, bloom)  # the save after segment 4 was lost
+    publish(4, name="seg-00009.parquet")  # redelivery
+    r = tail()[-1]
+    assert r["applied"] and r["events"] == 0, r
