@@ -23,14 +23,14 @@ cross-run state.
 
 from __future__ import annotations
 
-import os
+import io
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tableformat.lake import _merge_ranges
+from .tableformat.lake import _atomic_write, _merge_ranges
 
 _MIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
@@ -134,9 +134,9 @@ class LsnBloom:
 
     # ------------------------------------------------------------ persist
     def save(self, path: str) -> None:
-        tmp = path + ".tmp.npz"  # savez appends .npz when missing
+        buf = io.BytesIO()
         np.savez_compressed(
-            tmp,
+            buf,
             bits=self.bits,
             meta=np.array(
                 [self.n_bits, self.n_hashes, self.covered_lo,
@@ -144,7 +144,8 @@ class LsnBloom:
                 dtype=np.int64,
             ),
         )
-        os.rename(tmp, path)  # np.load sniffs the zip magic, any extension
+        # fsync'd tmp + rename; np.load sniffs the zip magic, any name
+        _atomic_write(path, buf.getvalue())
 
     @classmethod
     def load(cls, path: str) -> "LsnBloom":

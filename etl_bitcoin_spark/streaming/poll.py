@@ -37,9 +37,9 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 from typing import Any
 
+from ..tableformat.lake import _atomic_write
 from .tailer import BinlogTailer
 
 
@@ -60,12 +60,7 @@ class PollTailer(BinlogTailer):
 
     def _write_cursor(self, last: str) -> None:
         os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = f"{self.cursor_path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"last": last}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self.cursor_path)
+        _atomic_write(self.cursor_path, json.dumps({"last": last}))
 
     # -------------------------------------------------------------- poll
     def _pending(self) -> list[str]:

@@ -32,8 +32,10 @@ from __future__ import annotations
 
 import json
 import os
+import zlib
 from typing import Any
 from urllib.parse import unquote, urlparse
+from zipfile import BadZipFile
 
 from pyspark.sql import SparkSession
 
@@ -166,13 +168,17 @@ class BinlogTailer:
         if lineage is None:
             lineage = self.lake.lineage(ref=self.ref)
         mark = lineage_mark(lineage["hwm"], lineage["applied_ranges"])
-        if os.path.exists(self.bloom_path):
+        try:
             self._bloom = LsnBloom.load(self.bloom_path)
+        except (OSError, EOFError, ValueError, KeyError, BadZipFile,
+                zlib.error):
+            pass  # no file, or a torn one: rebuilt below
         if self._bloom is None or self._bloom.covers != mark:
-            # No file, or a stale one: a crash lost the newest async
-            # save (or the file predates the mark). Its covered window
-            # would vouch for lsns whose bits it never set, so rebuild
-            # from manifest lineage (the crash-safe recovery path).
+            # No readable file, or a stale one: a crash lost the newest
+            # async save (or the file predates the mark). Its covered
+            # window would vouch for lsns whose bits it never set, so
+            # rebuild from manifest lineage (the crash-safe recovery
+            # path).
             self._bloom = LsnBloom.rebuild_from_ranges(
                 lineage["applied_ranges"]
             )

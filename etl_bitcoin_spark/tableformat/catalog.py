@@ -9,10 +9,12 @@ This module supplies the engine-level equivalent with real atomicity:
 
 - Tables are ordinary LakeTables under ``<root>/<name>/``.
 - The catalog keeps its own manifest: a map ``table -> pinned manifest
-  version`` published via the SAME os.link CAS claim protocol the table
-  layer uses — two concurrent ``commit_multi`` calls (or a
-  ``create_table`` racing one) can never silently clobber each other's
-  catalog pointer; the loser REBASES on the winner's manifest.
+  version`` kept as the same manifest chain a table keeps, through the
+  same code (``lake._claim_manifest``, ``lake._latest_version``, the
+  ``lake._batch_applied`` ledger) — two concurrent ``commit_multi``
+  calls (or a ``create_table`` racing one) can never silently clobber
+  each other's catalog pointer; the loser REBASES on the winner's
+  manifest.
 - ``commit_multi`` stages every table's snapshot first (per-table
   commits, idempotent on batch_id), then publishes ONE catalog manifest
   pinning all the new versions. A crash anywhere before that final
@@ -39,20 +41,27 @@ table's own latest, so a half-landed transaction is invisible.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import time
-import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .lake import (
+    _CLAIM_RETRIES,
+    _JSON_CACHE,
     CommitConflict,
     LakeTable,
-    _atomic_write,
+    _applied_ids,
+    _batch_applied,
+    _claim_manifest,
+    _latest_version,
     _load_json_cached,
+    _mark_batch_applied,
+    _publish,
+    _versions,
+    _vname,
+    prune_marker_ledger,
 )
 
 
@@ -67,16 +76,14 @@ class LakeCatalog:
     def create(cls, spark: SparkSession, root: str) -> "LakeCatalog":
         cat = cls(spark, root)
         os.makedirs(os.path.join(cat.catalog_dir, "batches"), exist_ok=True)
-        cat._publish(
-            {
-                "version": 1,
-                "parent": None,
-                "batch_id": None,
-                "applied_batch_ids": [],
-                "committed_at": time.time(),
-                "tables": {},
-            }
-        )
+        _publish(cat.catalog_dir, {
+            "version": 1,
+            "parent": None,
+            "batch_id": None,
+            "applied_batch_ids": [],
+            "committed_at": time.time(),
+            "tables": {},
+        })
         return cat
 
     @classmethod
@@ -94,93 +101,29 @@ class LakeCatalog:
             self.spark, os.path.join(self.root, name), schema_ddl, key_cols,
             n_buckets,
         )
-        for _attempt in range(8):
+        for _attempt in range(_CLAIM_RETRIES):
             cur = self.snapshot()
             m = dict(cur)
             m["version"] = cur["version"] + 1
             m["parent"] = cur["version"]
             m["tables"] = dict(cur["tables"], **{name: 1})
             m["committed_at"] = time.time()
-            if self._claim(m):
+            if _claim_manifest(self.catalog_dir, m):
                 return t
-        raise CommitConflict(f"lost 8 CAS races registering table {name}")
+        raise CommitConflict(
+            f"lost {_CLAIM_RETRIES} CAS races registering table {name}"
+        )
 
     # ------------------------------------------------------------ manifests
-    def _vname(self, version: int) -> str:
-        return f"v{version:08d}.json"
-
-    def _publish(self, manifest: dict[str, Any]) -> None:
-        name = self._vname(manifest["version"])
-        _atomic_write(
-            os.path.join(self.catalog_dir, name), json.dumps(manifest, indent=1)
-        )
-        _atomic_write(os.path.join(self.catalog_dir, "_latest"), name)
-
-    def _claim(self, manifest: dict[str, Any]) -> bool:
-        """CAS publish (os.link create-if-absent), same protocol as
-        LakeTable._claim_version: the loser of a version race sees False
-        and rebases instead of silently overwriting the winner."""
-        name = self._vname(manifest["version"])
-        path = os.path.join(self.catalog_dir, name)
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(json.dumps(manifest, indent=1))
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            os.remove(tmp)
-            return False
-        os.remove(tmp)
-        _atomic_write(os.path.join(self.catalog_dir, "_latest"), name)
-        return True
-
-    def _latest_version(self) -> int:
-        hint = 0
-        try:
-            with open(os.path.join(self.catalog_dir, "_latest")) as f:
-                hint = int(f.read().strip()[1:-5])
-        except (FileNotFoundError, ValueError):
-            vs = self.versions()
-            if not vs:
-                raise FileNotFoundError(
-                    f"no catalog manifests under {self.catalog_dir}"
-                )
-            hint = vs[-1]
-        v = hint
-        while os.path.exists(
-            os.path.join(self.catalog_dir, self._vname(v + 1))
-        ):
-            v += 1
-        return v
-
     def snapshot(self, version: int | None = None) -> dict[str, Any]:
         if version is None:
-            version = self._latest_version()
+            version = _latest_version(self.catalog_dir)
         return _load_json_cached(
-            os.path.join(self.catalog_dir, self._vname(version))
+            os.path.join(self.catalog_dir, _vname(version))
         )
 
-    # ------------------------------------------------------- batch ledger
-    def _batch_marker(self, batch_id: str) -> str:
-        h = hashlib.md5(batch_id.encode()).hexdigest()
-        return os.path.join(self.catalog_dir, "batches", h[:2], h)
-
-    def _batch_applied(self, m: dict[str, Any], batch_id: str) -> bool:
-        return batch_id in m["applied_batch_ids"] or os.path.exists(
-            self._batch_marker(batch_id)
-        )
-
-    def _mark_batch_applied(self, batch_id: str) -> None:
-        p = self._batch_marker(batch_id)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        try:
-            # creation stamp inside the marker (see lake.py rationale)
-            with open(p, "x") as f:
-                f.write(repr(time.time()))
-        except FileExistsError:
-            pass
+    def versions(self) -> list[int]:
+        return _versions(self.catalog_dir)
 
     # ----------------------------------------------------------------- read
     def table(self, name: str) -> LakeTable:
@@ -201,7 +144,6 @@ class LakeCatalog:
         self,
         writes: dict[str, dict[str, Any]],
         batch_id: str,
-        max_retries: int = 8,
     ) -> bool:
         """Land one batch across several tables atomically (the engine
         analog of the reference's one-DBTx-many-tables Commit).
@@ -219,8 +161,7 @@ class LakeCatalog:
         same batch_id resumes (already-committed tables are recovered by
         batch_id) and completes the publish. Returns False if the whole
         transaction was already applied."""
-        cat = self.snapshot()
-        if self._batch_applied(cat, batch_id):
+        if _batch_applied(self.catalog_dir, self.snapshot(), batch_id):
             return False
 
         def _stage(name: str, kw: dict[str, Any]) -> tuple[str, int]:
@@ -258,9 +199,18 @@ class LakeCatalog:
         else:
             for name, kw in writes.items():
                 ours[name] = _stage(name, kw)[1]
-        for _attempt in range(max_retries):
+        return self._publish_pins(ours, batch_id, f"batch {batch_id}")
+
+    def _publish_pins(
+        self, ours: dict[str, int], batch_id: str, what: str
+    ) -> bool:
+        """Pin-and-publish loop of a catalog transaction: claim the next
+        catalog version pinning each table in ``ours`` at max(winner's
+        pin, ours), rebasing on lost races; then mark the batch. False
+        if the batch is already applied."""
+        for _attempt in range(_CLAIM_RETRIES):
             cur = self.snapshot()
-            if self._batch_applied(cur, batch_id):
+            if _batch_applied(self.catalog_dir, cur, batch_id):
                 return False
             pinned = dict(cur["tables"])
             for name, v in ours.items():
@@ -269,15 +219,15 @@ class LakeCatalog:
                 "version": cur["version"] + 1,
                 "parent": cur["version"],
                 "batch_id": batch_id,
-                "applied_batch_ids": (cur["applied_batch_ids"] + [batch_id])[-256:],
+                "applied_batch_ids": _applied_ids(cur, batch_id),
                 "committed_at": time.time(),
                 "tables": pinned,
             }
-            if self._claim(manifest):
-                self._mark_batch_applied(batch_id)
+            if _claim_manifest(self.catalog_dir, manifest):
+                _mark_batch_applied(self.catalog_dir, batch_id)
                 return True
         raise CommitConflict(
-            f"lost {max_retries} CAS races publishing catalog batch {batch_id}"
+            f"lost {_CLAIM_RETRIES} CAS races publishing catalog {what}"
         )
 
     def publish_branches(
@@ -285,7 +235,6 @@ class LakeCatalog:
         branches: dict[str, str],
         batch_id: str,
         drop: bool = False,
-        max_retries: int = 8,
     ) -> bool:
         """Catalog-atomic multi-table WRITE-AUDIT-PUBLISH: fast-forward
         each table's branch onto its main head, then pin every
@@ -304,39 +253,18 @@ class LakeCatalog:
         head (lake.publish_branch's ancestor check), and the catalog
         CAS then completes. A table whose main truly diverged raises
         CommitConflict before any pin moves."""
-        cat = self.snapshot()
-        if self._batch_applied(cat, batch_id):
+        if _batch_applied(self.catalog_dir, self.snapshot(), batch_id):
             return False
-        ours: dict[str, int] = {}
-        for name, br in branches.items():
-            ours[name] = self.table(name).publish_branch(br, drop=False)
-        for _attempt in range(max_retries):
-            cur = self.snapshot()
-            if self._batch_applied(cur, batch_id):
-                return False
-            pinned = dict(cur["tables"])
-            for name, v in ours.items():
-                pinned[name] = max(v, pinned.get(name, 0))
-            manifest = {
-                "version": cur["version"] + 1,
-                "parent": cur["version"],
-                "batch_id": batch_id,
-                "applied_batch_ids": (
-                    cur["applied_batch_ids"] + [batch_id]
-                )[-256:],
-                "committed_at": time.time(),
-                "tables": pinned,
-            }
-            if self._claim(manifest):
-                self._mark_batch_applied(batch_id)
-                if drop:
-                    for name, br in branches.items():
-                        self.table(name).drop_branch(br)
-                return True
-        raise CommitConflict(
-            f"lost {max_retries} CAS races publishing catalog branches "
-            f"{batch_id}"
-        )
+        ours = {
+            name: self.table(name).publish_branch(br, drop=False)
+            for name, br in branches.items()
+        }
+        if not self._publish_pins(ours, batch_id, f"branches {batch_id}"):
+            return False
+        if drop:
+            for name, br in branches.items():
+                self.table(name).drop_branch(br)
+        return True
 
     def verify(self, deep: bool = False) -> dict[str, Any]:
         """Catalog fsck: every pin must reference an existing snapshot
@@ -420,7 +348,7 @@ class LakeCatalog:
             if v is not None and t.snapshot(v).get("parent") == pinned_v:
                 ours[name] = v
         if ours:
-            for _attempt in range(8):
+            for _attempt in range(_CLAIM_RETRIES):
                 cur = self.snapshot()
                 pinned = dict(cur["tables"])
                 moved = False
@@ -441,16 +369,9 @@ class LakeCatalog:
                     "committed_at": time.time(),
                     "tables": pinned,
                 }
-                if self._claim(manifest):
+                if _claim_manifest(self.catalog_dir, manifest):
                     break
         return results
-
-    def versions(self) -> list[int]:
-        out = []
-        for n in os.listdir(self.catalog_dir):
-            if n.startswith("v") and n.endswith(".json"):
-                out.append(int(n[1:-5]))
-        return sorted(out)
 
     def expire_snapshots(
         self,
@@ -463,14 +384,12 @@ class LakeCatalog:
         table version any retained catalog snapshot still references —
         a consistent multi-table time-travel window survives, everything
         older is GC'd."""
-        from .lake import _JSON_CACHE
-
         versions = self.versions()
         keep = versions[-keep_last:]
         removed = 0
         for v in versions:
             if v not in keep:
-                p = os.path.join(self.catalog_dir, self._vname(v))
+                p = os.path.join(self.catalog_dir, _vname(v))
                 _JSON_CACHE.pop(p, None)
                 os.remove(p)
                 removed += 1
@@ -488,11 +407,8 @@ class LakeCatalog:
             )
         # the catalog's own batch ledger has the same unbounded-growth
         # shape as a table's — same retention contract applies
-        from .lake import prune_marker_ledger
-
         markers = prune_marker_ledger(
-            os.path.join(self.catalog_dir, "batches"),
-            batch_marker_retention_sec,
+            self.catalog_dir, batch_marker_retention_sec
         )
         return {
             "catalog_snapshots_removed": removed,

@@ -6,8 +6,10 @@ built natively". Semantics provided:
 
 - **Atomic commit**: a snapshot is a manifest tree published via a CAS
   on the version number (``os.link`` create-if-absent — atomic on one
-  filesystem). Readers resolve latest -> manifest tree -> file list, so
-  they always see a complete snapshot, never a partial write. This
+  filesystem; ``_claim_file``, the one claim branch heads and
+  ``LakeCatalog`` use too). Readers resolve latest -> manifest tree ->
+  file list, so they always see a complete snapshot, never a partial
+  write. This
   fixes the reference's non-atomic multi-file commit (a Go worker
   failing mid-``DBTx.Commit`` leaves tables inconsistent — reference
   database/csv/neo4j_csv/neo4j_csv.go:103-117 fans one message per table
@@ -70,6 +72,7 @@ Layout::
       _manifests/gm/gm-*.json         # immutable group manifests
       _manifests/bm/bm-*.json         # immutable bucket manifests
       _manifests/batches/<xx>/<id>    # durable applied-batch markers
+      _manifests/heads/<ref>/h<k>.json  # branch head chains (+ _hint)
       data/commit-<v>-<id>/bucket=<k>/*.parquet
 
 Multi-writer: Iceberg-style optimistic concurrency. Writers stage data
@@ -104,6 +107,12 @@ DELETED_COL = "__deleted"
 # marker ledger below covers every batch ever applied, so even an
 # append-mode batch replayed thousands of commits later is rejected.
 MAX_APPLIED_BATCH_IDS = 256
+
+# Lost CAS races a writer absorbs before raising CommitConflict: a data
+# commit rebases up to _COMMIT_RETRIES times; metadata-only commits,
+# branch publishes and catalog publishes up to _CLAIM_RETRIES times.
+_COMMIT_RETRIES = 5
+_CLAIM_RETRIES = 8
 
 # Buckets per group manifest. 4096 buckets -> 64 group files; a commit
 # touching k buckets rewrites <=k group manifests + k bucket manifests +
@@ -180,13 +189,156 @@ def stored_schema_ddl(m: dict) -> str:
     )
 
 
-def _atomic_write(path: str, payload: str) -> None:
+def _write_tmp(path: str, payload: str | bytes) -> str:
+    """Durably write ``payload`` to a fresh tmp file beside ``path``."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
+    with open(tmp, "wb" if isinstance(payload, bytes) else "w") as f:
         f.write(payload)
         f.flush()
         os.fsync(f.fileno())
-    os.rename(tmp, path)
+    return tmp
+
+
+def _atomic_write(path: str, payload: str | bytes) -> None:
+    """Replace ``path`` with ``payload``: fsync'd tmp, then rename."""
+    os.rename(_write_tmp(path, payload), path)
+
+
+# ------------------------------------------------- manifest-chain protocol
+# A table's ``_manifests`` and a catalog's ``_catalog`` are the same chain
+# (``v%08d.json`` + ``_latest`` hint + ``batches/`` ledger, see the module
+# docstring's layout); every piece below takes the chain's directory.
+
+
+def _claim_file(path: str, payload: str) -> bool:
+    """Create ``path`` holding ``payload`` iff no writer created it
+    first: the one compare-and-swap of the table format. An fsync'd tmp
+    is hard-linked into place (``os.link`` is create-if-absent, atomic
+    on one filesystem), so a reader never sees a partial file; the tmp
+    is removed either way. False when the name was already taken."""
+    tmp = _write_tmp(path, payload)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        return False
+    finally:
+        os.remove(tmp)
+    return True
+
+
+def _vname(version: int) -> str:
+    return f"v{version:08d}.json"
+
+
+def _publish(d: str, manifest: dict[str, Any]) -> None:
+    """Write a chain's first manifest (no writer can race a create)."""
+    name = _vname(manifest["version"])
+    _atomic_write(os.path.join(d, name), json.dumps(manifest, indent=1))
+    _atomic_write(os.path.join(d, "_latest"), name)
+
+
+def _claim_manifest(d: str, manifest: dict[str, Any]) -> bool:
+    """Claim ``manifest``'s version in chain ``d``, then move the
+    ``_latest`` hint to it. False if another writer claimed the version
+    first — the caller rebases and retries. The hint is best effort:
+    ``_latest_version`` walks forward from it, so a stale hint never
+    rolls a reader back."""
+    name = _vname(manifest["version"])
+    if not _claim_file(os.path.join(d, name), json.dumps(manifest, indent=1)):
+        return False
+    _atomic_write(os.path.join(d, "_latest"), name)
+    return True
+
+
+def _versions(d: str) -> list[int]:
+    return sorted(
+        int(n[1:-5]) for n in os.listdir(d)
+        if n.startswith("v") and n.endswith(".json")
+    )
+
+
+def _latest_version(d: str) -> int:
+    """Latest claimed version of chain ``d`` in O(1 + writer-lag) stat
+    calls: start from the ``_latest`` hint and walk forward while a
+    higher version exists. A full listing happens only when the hint is
+    missing — manifests accumulate one per micro-batch between
+    expiries, and hot-path metadata reads must not become
+    O(#snapshots)."""
+    try:
+        with open(os.path.join(d, "_latest")) as f:
+            v = int(f.read().strip()[1:-5])
+    except (FileNotFoundError, ValueError):
+        vs = _versions(d)
+        if not vs:
+            raise FileNotFoundError(f"no manifests under {d}") from None
+        v = vs[-1]
+    while os.path.exists(os.path.join(d, _vname(v + 1))):
+        v += 1
+    return v
+
+
+def _batch_marker(d: str, batch_id: str) -> str:
+    h = hashlib.md5(batch_id.encode()).hexdigest()
+    return os.path.join(d, "batches", h[:2], h)
+
+
+def _batch_applied(d: str, m: dict[str, Any], batch_id: str) -> bool:
+    """Exactly-once guard: recent ids inline in the manifest, ALL ids in
+    the durable marker ledger — so an append-mode batch (which writes
+    no applied_ranges) replayed after >MAX_APPLIED_BATCH_IDS commits is
+    still rejected instead of silently double-appending."""
+    return batch_id in m["applied_batch_ids"] or os.path.exists(
+        _batch_marker(d, batch_id)
+    )
+
+
+def _applied_ids(m: dict[str, Any], batch_id: str) -> list[str]:
+    """The inline id list of a manifest committing ``batch_id`` on m."""
+    return (m["applied_batch_ids"] + [batch_id])[-MAX_APPLIED_BATCH_IDS:]
+
+
+def _mark_batch_applied(d: str, batch_id: str) -> None:
+    p = _batch_marker(d, batch_id)
+    os.makedirs(os.path.dirname(p), exist_ok=True)
+    try:
+        # creation time INSIDE the marker: backup/restore or copies
+        # rewrite filesystem mtimes, which would silently mis-age
+        # the exactly-once absorption window if pruning trusted them
+        with open(p, "x") as f:
+            f.write(repr(time.time()))
+    except FileExistsError:
+        pass
+
+
+def prune_marker_ledger(d: str, retention_sec: float | None) -> int:
+    """Prune chain ``d``'s batch-ledger markers older than the
+    retention. A missing ledger dir is an empty ledger, not an error."""
+    ledger = os.path.join(d, "batches")
+    if retention_sec is None or not os.path.isdir(ledger):
+        return 0
+    cutoff = time.time() - retention_sec
+    removed = 0
+    for shard in os.listdir(ledger):
+        sd = os.path.join(ledger, shard)
+        if not os.path.isdir(sd):
+            continue
+        for fn in os.listdir(sd):
+            p = os.path.join(sd, fn)
+            try:
+                # age by the creation stamp recorded in the marker (see
+                # _mark_batch_applied); legacy/empty markers fall back
+                # to mtime
+                try:
+                    with open(p) as f:
+                        born = float(f.read().strip())
+                except (ValueError, OSError):
+                    born = os.path.getmtime(p)
+                if born < cutoff:
+                    os.remove(p)
+                    removed += 1
+            except FileNotFoundError:
+                pass
+    return removed
 
 
 def _empty_bm() -> dict[str, Any]:
@@ -630,7 +782,7 @@ class LakeTable:
             "groups": {},
             "lineage": {"hwm": -1, "applied_ranges": [], "rows_total": 0},
         }
-        t._publish(manifest)
+        _publish(t.manifest_dir, manifest)
         return t
 
     @classmethod
@@ -638,39 +790,19 @@ class LakeTable:
         return os.path.exists(os.path.join(root, "_manifests", "_latest"))
 
     # ------------------------------------------------------------ manifests
-    def _vname(self, version: int) -> str:
-        return f"v{version:08d}.json"
-
-    def _publish(self, manifest: dict[str, Any]) -> None:
-        name = self._vname(manifest["version"])
-        _atomic_write(
-            os.path.join(self.manifest_dir, name),
-            json.dumps(manifest, indent=1),
-        )
-        _atomic_write(os.path.join(self.manifest_dir, "_latest"), name)
+    _vname = staticmethod(_vname)
 
     def _claim_version(self, manifest: dict[str, Any]) -> bool:
-        """Multi-writer CAS: atomically create v{N}.json via os.link
-        (create-if-absent on one filesystem). Returns False if another
-        writer claimed version N first — the caller rebases and retries.
-        ``_latest`` stays a best-effort hint; the authoritative latest is
-        resolved by walking forward from the hint (see _latest_version),
-        so a stale hint can never roll a reader back."""
-        name = self._vname(manifest["version"])
-        path = os.path.join(self.manifest_dir, name)
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(json.dumps(manifest, indent=1))
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            os.remove(tmp)
-            return False
-        os.remove(tmp)
-        _atomic_write(os.path.join(self.manifest_dir, "_latest"), name)
-        return True
+        """Multi-writer CAS on the table's version chain
+        (``_claim_manifest``). Returns False if another writer claimed
+        version N first — the caller rebases and retries."""
+        return _claim_manifest(self.manifest_dir, manifest)
+
+    def _head_tracked(self, ref: str) -> bool:
+        """Whether commits to ``ref`` advance an explicit head chain:
+        every branch does, and main does once a ``create_branch``
+        materialized ``heads/main``."""
+        return ref != "main" or os.path.isdir(self._heads_dir("main"))
 
     def _next_claim_version(self, cur_version: int, ref: str) -> int:
         """The version a commit based on ``cur_version`` of ``ref``
@@ -684,34 +816,11 @@ class LakeTable:
         v1 — B's generation vanished from the chain). Branched tables
         NEED global-max + 1 (versions are globally contiguous across
         refs while a ref head trails), and there the post-claim head
-        CAS (parent check, ``_advance_head``) detects the race
+        CAS (parent check, ``_advance_ref``) detects the race
         instead."""
-        if ref != "main" or os.path.isdir(self._heads_dir("main")):
-            return max(self._latest_version(), cur_version) + 1
+        if self._head_tracked(ref):
+            return max(_latest_version(self.manifest_dir), cur_version) + 1
         return cur_version + 1
-
-    def _latest_version(self) -> int:
-        """Resolve the latest committed version in O(1 + writer-lag) stat
-        calls: start from the ``_latest`` hint (written after every
-        claim) and walk forward while a higher version exists. Never a
-        full directory listing on the hot path — manifests accumulate
-        one per micro-batch between expiries, and hot-path metadata
-        reads must not become O(#snapshots)."""
-        hint = 0
-        try:
-            with open(os.path.join(self.manifest_dir, "_latest")) as f:
-                hint = int(f.read().strip()[1:-5])
-        except (FileNotFoundError, ValueError):
-            vs = self.versions()
-            if not vs:
-                raise FileNotFoundError(
-                    f"no manifests under {self.manifest_dir}"
-                )
-            hint = vs[-1]
-        v = hint
-        while os.path.exists(os.path.join(self.manifest_dir, self._vname(v + 1))):
-            v += 1
-        return v
 
     def snapshot(
         self, version: int | None = None, ref: str | None = None
@@ -728,8 +837,9 @@ class LakeTable:
                     raise ValueError(f"no branch {ref!r}")
                 version = v
             else:
-                v = self._head_version("main")
-                version = v if v is not None else self._latest_version()
+                version = self._head_version("main")
+                if version is None:
+                    version = _latest_version(self.manifest_dir)
         return _load_json_cached(
             os.path.join(self.manifest_dir, self._vname(version))
         )
@@ -791,11 +901,7 @@ class LakeTable:
         return out
 
     def versions(self) -> list[int]:
-        out = []
-        for n in os.listdir(self.manifest_dir):
-            if n.startswith("v") and n.endswith(".json"):
-                out.append(int(n[1:-5]))
-        return sorted(out)
+        return _versions(self.manifest_dir)
 
     # --------------------------------------------------------- branches
     # Write-audit-publish (Iceberg branch/WAP analog). A branch is a
@@ -850,33 +956,24 @@ class LakeTable:
     def _head_version(self, ref: str) -> int | None:
         return self._head_entry(self._heads_dir(ref))[1]
 
-    def _claim_head_file(self, d: str, k: int, version: int) -> bool:
+    @staticmethod
+    def _claim_head_file(d: str, k: int, version: int) -> bool:
         os.makedirs(d, exist_ok=True)
-        path = os.path.join(d, f"h{k}.json")
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(json.dumps({"version": int(version)}))
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            os.remove(tmp)
+        payload = json.dumps({"version": int(version)})
+        if not _claim_file(os.path.join(d, f"h{k}.json"), payload):
             return False
-        os.remove(tmp)
         _atomic_write(os.path.join(d, "_hint"), str(k))
         return True
 
-    def _advance_main_head(self, manifest: dict) -> bool:
-        """Post-claim head maintenance for metadata-only main commits
-        (evolve/drop): a no-op on un-branched tables; on branched
-        tables CAS main's head from the manifest's parent to its
-        version, False (caller rebases, claimed version orphans) on a
-        lost race."""
-        if not os.path.isdir(self._heads_dir("main")):
-            return True
-        return self._advance_head(
-            "main", manifest["version"], parent=manifest["parent"]
+    def _advance_ref(self, ref: str, manifest: dict) -> bool:
+        """Post-claim head maintenance of every commit: a no-op when no
+        head chain tracks ``ref``; otherwise CAS the ref's head from the
+        manifest's parent to its version, False (the caller rebases,
+        the claimed version stays an unreferenced orphan) on a lost
+        race. Runs AFTER the version claim, which closes the heads/main
+        materialization race (see above)."""
+        return not self._head_tracked(ref) or self._advance_head(
+            ref, manifest["version"], parent=manifest["parent"]
         )
 
     def _advance_head(self, ref: str, version: int, parent: int) -> bool:
@@ -926,7 +1023,7 @@ class LakeTable:
         md = self._heads_dir("main")
         os.makedirs(md, exist_ok=True)
         if self._head_entry(md)[1] is None:
-            self._claim_head_file(md, 0, self._latest_version())
+            self._claim_head_file(md, 0, _latest_version(self.manifest_dir))
         base = (
             self.snapshot()["version"] if from_version is None
             else int(from_version)
@@ -953,6 +1050,16 @@ class LakeTable:
         shutil.rmtree(d, ignore_errors=True)
         return True
 
+    def _has_ancestor(self, v: int, ancestor: int) -> bool:
+        """Whether ``ancestor`` is ``v`` or on ``v``'s parent chain.
+        Versions only grow along a chain, so the walk stops below
+        ``ancestor``. A missing snapshot on the way raises
+        FileNotFoundError."""
+        cur: int | None = v
+        while cur is not None and cur > ancestor:
+            cur = self.snapshot(cur).get("parent")
+        return cur == ancestor
+
     def branch_diff(
         self, name: str, include_preimages: bool = False
     ) -> DataFrame:
@@ -966,11 +1073,8 @@ class LakeTable:
             raise ValueError(f"no branch {name!r}")
         mh = self._head_version("main")
         if mh is None:
-            mh = self._latest_version()
-        v: int | None = bh
-        while v is not None and v != mh and v > mh:
-            v = self.snapshot(v).get("parent")
-        if v != mh:
+            mh = _latest_version(self.manifest_dir)
+        if not self._has_ancestor(bh, mh):
             raise CommitConflict(
                 f"main advanced past branch {name!r}'s fork point; "
                 f"the diff against v{mh} would be misleading — re-fork"
@@ -979,9 +1083,7 @@ class LakeTable:
             mh, bh, include_preimages=include_preimages
         )
 
-    def publish_branch(
-        self, name: str, drop: bool = False, max_retries: int = 8
-    ) -> int:
+    def publish_branch(self, name: str, drop: bool = False) -> int:
         """Atomically fast-forward main to the branch head — the
         PUBLISH step of write-audit-publish. Requires main to be an
         ancestor of the branch head (nothing landed on main since the
@@ -989,7 +1091,7 @@ class LakeTable:
         The swap is the head CAS itself, so a main commit racing the
         publish either lands before it (publish re-checks ancestry and
         raises) or conflicts on the head chain and rebases."""
-        for _ in range(max_retries):
+        for _ in range(_CLAIM_RETRIES):
             bh = self._head_version(name)
             if bh is None:
                 raise ValueError(f"no branch {name!r}")
@@ -999,44 +1101,33 @@ class LakeTable:
                     f"main has no explicit head; branch {name!r} was "
                     "not created by create_branch"
                 )
-            if bh == mh:
-                if drop:
-                    self.drop_branch(name)
-                return bh
+            published = bh == mh
             if bh < mh:
                 # already-published resume path (a caller re-running
                 # after a crash between this publish and its own
                 # bookkeeping, e.g. a multi-table catalog publish): if
                 # the branch head sits in main's history the publish
                 # is a completed no-op; otherwise main truly diverged.
-                v2: int | None = mh
-                while v2 is not None and v2 > bh:
-                    try:
-                        v2 = self.snapshot(v2).get("parent")
-                    except FileNotFoundError:
-                        # main's chain is expired below here — ancestry
-                        # cannot be confirmed; fall through to the
-                        # diverged check (bh < mh there raises)
-                        v2 = None
-                if v2 == bh:
-                    if drop:
-                        self.drop_branch(name)
-                    return bh
-            v: int | None = bh
-            while v is not None and v != mh and v > mh:
-                v = self.snapshot(v).get("parent")
-            if v != mh:
-                raise CommitConflict(
-                    f"main advanced past branch {name!r}'s fork point "
-                    f"(main v{mh} not an ancestor of branch v{bh}); "
-                    "re-fork from the new main and re-apply"
-                )
-            if self._advance_head("main", bh, parent=mh):
+                try:
+                    published = self._has_ancestor(mh, bh)
+                except FileNotFoundError:
+                    # main's chain is expired below here — ancestry
+                    # cannot be confirmed; the diverged check raises
+                    published = False
+            if not published:
+                if not self._has_ancestor(bh, mh):
+                    raise CommitConflict(
+                        f"main advanced past branch {name!r}'s fork point "
+                        f"(main v{mh} not an ancestor of branch v{bh}); "
+                        "re-fork from the new main and re-apply"
+                    )
+                published = self._advance_head("main", bh, parent=mh)
+            if published:
                 if drop:
                     self.drop_branch(name)
                 return bh
         raise CommitConflict(
-            f"lost {max_retries} head CAS races publishing {name!r}"
+            f"lost {_CLAIM_RETRIES} head CAS races publishing {name!r}"
         )
 
     # ----------------------------------------------------- manifest tree IO
@@ -1157,29 +1248,10 @@ class LakeTable:
 
     # ------------------------------------------------------- batch ledger
     def _batch_marker(self, batch_id: str) -> str:
-        h = hashlib.md5(batch_id.encode()).hexdigest()
-        return os.path.join(self.manifest_dir, "batches", h[:2], h)
+        return _batch_marker(self.manifest_dir, batch_id)
 
     def _batch_applied(self, m: dict[str, Any], batch_id: str) -> bool:
-        """Exactly-once guard: recent ids inline in the snapshot, ALL ids
-        in the durable marker ledger — so an append-mode batch (which
-        writes no applied_ranges) replayed after >MAX_APPLIED_BATCH_IDS
-        commits is still rejected instead of silently double-appending."""
-        return batch_id in m["applied_batch_ids"] or os.path.exists(
-            self._batch_marker(batch_id)
-        )
-
-    def _mark_batch_applied(self, batch_id: str) -> None:
-        p = self._batch_marker(batch_id)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        try:
-            # creation time INSIDE the marker: backup/restore or copies
-            # rewrite filesystem mtimes, which would silently mis-age
-            # the exactly-once absorption window if pruning trusted them
-            with open(p, "x") as f:
-                f.write(repr(time.time()))
-        except FileExistsError:
-            pass
+        return _batch_applied(self.manifest_dir, m, batch_id)
 
     # ----------------------------------------------------------------- read
     def read(
@@ -1285,39 +1357,24 @@ class LakeTable:
             kset = sorted(set(keys))
             if not kset:
                 raise ValueError("keys must be non-empty")
-            first_key_type = next(
-                (
-                    f.dataType.simpleString()
-                    for f in self.spark.createDataFrame(
-                        [], m["schema_ddl"]
-                    ).schema
-                    if f.name == m["key_cols"][0]
-                ),
-                None,
-            )
-            if (
-                buckets is None
-                and len(m["key_cols"]) == 1
-                and first_key_type == "string"
-            ):
+            k0 = m["key_cols"][0]
+            if buckets is None and len(m["key_cols"]) == 1 and dict(
+                p.split(None, 1) for p in ddl_split(m["schema_ddl"])
+            ).get(k0, "").lower().split()[:1] == ["string"]:
                 # single-key STRING-column table: the touched buckets
-                # are a pure function of the keys — compute them with
-                # the SAME hash Spark's bucket_expr uses (a tiny local
-                # job over |keys| literal rows, never a table scan).
-                # Non-string key columns fall through to the unpruned
-                # scan: F.hash over a string literal differs from the
-                # stored column's hash, so a string-typed probe frame
+                # are a pure function of the keys — bucket_array is
+                # bucket_expr's hash on the driver, bit for bit, so no
+                # Spark job runs before the scan. Other key types (and
+                # keys the driver hash rejects, e.g. over 8 KiB) keep
+                # the unpruned scan: a string-typed probe of an int key
                 # would derive the WRONG buckets and silently drop rows.
-                kdf = self.spark.createDataFrame(
-                    [(k,) for k in kset], f"{m['key_cols'][0]} string"
-                )
-                buckets = sorted(
-                    r[0] for r in kdf.select(
-                        self.bucket_expr(
-                            m["n_buckets"], m["key_cols"]
-                        ).alias("b")
-                    ).distinct().collect()
-                )
+                try:
+                    buckets = sorted(set(self.bucket_array(
+                        pa.table({k0: pa.array(kset, pa.string())}),
+                        m["n_buckets"], [k0],
+                    ).tolist()))
+                except TypeError:
+                    pass
         entries = self.bucket_entries(
             version=m["version"], buckets=buckets, include_shard=False
         )
@@ -1639,7 +1696,6 @@ class LakeTable:
         lsn_ranges: list[list[int]] | None = None,
         mode: str = "replace",
         base_version: int | None = None,
-        max_retries: int = 5,
         lineage_fn=None,
         new_n_buckets: int | None = None,
         max_records_per_file: int | None = None,
@@ -2026,7 +2082,7 @@ class LakeTable:
             prev["group_size"] if new_n_buckets is None
             else min(GROUP_SIZE, new_n_buckets)
         )
-        for _attempt in range(max_retries):
+        for _attempt in range(_COMMIT_RETRIES):
             cur = self.snapshot(ref=ref)
             if self._batch_applied(cur, batch_id):
                 return False
@@ -2269,36 +2325,26 @@ class LakeTable:
                 "stats_col": cur.get("stats_col"),
                 "patch_cols": cur.get("patch_cols"),
                 "batch_id": batch_id,
-                "applied_batch_ids": (cur["applied_batch_ids"] + [batch_id])[
-                    -MAX_APPLIED_BATCH_IDS:
-                ],
+                "applied_batch_ids": _applied_ids(cur, batch_id),
                 "committed_at": time.time(),
                 "groups": groups,
                 "shard_deltas": sd_list,
                 "lineage": lineage,
                 "metrics": metrics or {},
             }
-            if self._claim_version(manifest):
-                # Branched tables maintain an explicit ref head: CAS it
-                # from this commit's parent to its version. Checked
-                # AFTER the version claim (closes the heads/main
-                # materialization race — see the branches section). A
-                # lost head CAS means a concurrent writer advanced the
-                # ref between our snapshot read and our claim: the
-                # claimed version stays behind as an unreferenced
-                # orphan (removing it would punch a hole in the
-                # version walk) and the loop rebases.
-                # re-check at advance time (not the claim-time check in
-                # _next_claim_version):
-                # a branch created mid-attempt materializes main's
-                # explicit head, and a claimed version that never
-                # advances it would be invisible to main readers
-                if ref != "main" or os.path.isdir(self._heads_dir("main")):
-                    if not self._advance_head(
-                        ref, manifest["version"], parent=cur["version"]
-                    ):
-                        continue
-                self._mark_batch_applied(batch_id)
+            # A lost head CAS means a concurrent writer advanced the
+            # ref between our snapshot read and our claim: the claimed
+            # version stays behind as an unreferenced orphan (removing
+            # it would punch a hole in the version walk) and the loop
+            # rebases. _advance_ref re-tests head tracking AFTER the
+            # claim, not the claim-time test in _next_claim_version: a
+            # branch created mid-attempt materializes main's explicit
+            # head, and a claimed version that never advances it would
+            # be invisible to main readers.
+            if self._claim_version(manifest) and self._advance_ref(
+                ref, manifest
+            ):
+                _mark_batch_applied(self.manifest_dir, batch_id)
                 # Commit observability (Iceberg commit-metrics analog):
                 # phase walls for the last successful commit — the data
                 # write (whichever stager ran), the footer-stats harvest
@@ -2315,7 +2361,30 @@ class LakeTable:
                 }
                 return True
         raise CommitConflict(
-            f"lost {max_retries} CAS races publishing batch {batch_id}"
+            f"lost {_COMMIT_RETRIES} CAS races publishing batch {batch_id}"
+        )
+
+    def _commit_metadata(self, batch_id: str, what: str, edit) -> bool:
+        """Claim loop of a metadata-only main commit: ``edit(prev)``
+        validates against the current snapshot and returns the manifest
+        fields it changes; the loop claims the next version, advances
+        main's head and marks the batch. A lost race rebases (metadata
+        commits carry no data to conflict on)."""
+        for _attempt in range(_CLAIM_RETRIES):
+            prev = self.snapshot()
+            if self._batch_applied(prev, batch_id):
+                return False
+            m = dict(prev, **edit(prev))
+            m["version"] = self._next_claim_version(prev["version"], "main")
+            m["parent"] = prev["version"]
+            m["batch_id"] = batch_id
+            m["applied_batch_ids"] = _applied_ids(prev, batch_id)
+            m["committed_at"] = time.time()
+            if self._claim_version(m) and self._advance_ref("main", m):
+                _mark_batch_applied(self.manifest_dir, batch_id)
+                return True
+        raise CommitConflict(
+            f"lost {_CLAIM_RETRIES} CAS races {what} ({batch_id})"
         )
 
     def evolve_schema(self, new_ddl: str, batch_id: str) -> bool:
@@ -2324,10 +2393,8 @@ class LakeTable:
         backfills them as null via the explicit read schema. CAS-safe
         under concurrent writers (metadata-only, so a lost race simply
         rebases on the winner)."""
-        for _attempt in range(8):
-            prev = self.snapshot()
-            if self._batch_applied(prev, batch_id):
-                return False
+
+        def edit(prev: dict[str, Any]) -> dict[str, Any]:
             revived = set(ddl_col_names(new_ddl)) & set(
                 prev.get("dropped_cols", [])
             )
@@ -2338,21 +2405,9 @@ class LakeTable:
                     "which would resurrect under the re-added name "
                     "(no per-file field IDs)"
                 )
-            m = dict(prev)
-            m["version"] = self._next_claim_version(prev["version"], "main")
-            m["parent"] = prev["version"]
-            m["schema_ddl"] = new_ddl
-            m["batch_id"] = batch_id
-            m["applied_batch_ids"] = (prev["applied_batch_ids"] + [batch_id])[
-                -MAX_APPLIED_BATCH_IDS:
-            ]
-            m["committed_at"] = time.time()
-            if self._claim_version(m):
-                if not self._advance_main_head(m):
-                    continue
-                self._mark_batch_applied(batch_id)
-                return True
-        raise CommitConflict(f"lost 8 CAS races evolving schema ({batch_id})")
+            return {"schema_ddl": new_ddl}
+
+        return self._commit_metadata(batch_id, "evolving schema", edit)
 
     def drop_column(self, col: str, batch_id: str) -> bool:
         """Metadata-only column DROP — the non-additive half of schema
@@ -2369,10 +2424,8 @@ class LakeTable:
         resurrect under the readded name. (For the transcripts pipeline
         specifically, the merge operators require their declared value
         columns; drop_column is the generic lake-table surface.)"""
-        for _attempt in range(8):
-            prev = self.snapshot()
-            if self._batch_applied(prev, batch_id):
-                return False
+
+        def edit(prev: dict[str, Any]) -> dict[str, Any]:
             if col in prev["key_cols"]:
                 raise ValueError(f"cannot drop key column {col!r}")
             if col == prev.get("stats_col"):
@@ -2383,29 +2436,18 @@ class LakeTable:
             keep = [p for p in parts if p.split(" ", 1)[0] != col]
             if len(keep) == len(parts):
                 raise ValueError(f"no such column {col!r}")
-            m2 = dict(prev)
-            m2["version"] = self._next_claim_version(prev["version"], "main")
-            m2["parent"] = prev["version"]
-            m2["schema_ddl"] = ", ".join(keep)
+            out: dict[str, Any] = {"schema_ddl": ", ".join(keep)}
             if col in (prev.get("patch_cols") or []):
                 # the cell column goes, its provenance stops scanning
-                m2["patch_cols"] = [
+                out["patch_cols"] = [
                     c for c in prev["patch_cols"] if c != col
                 ] or None
-            m2["dropped_cols"] = sorted(
+            out["dropped_cols"] = sorted(
                 set(prev.get("dropped_cols", [])) | {col}
             )
-            m2["batch_id"] = batch_id
-            m2["applied_batch_ids"] = (
-                prev["applied_batch_ids"] + [batch_id]
-            )[-MAX_APPLIED_BATCH_IDS:]
-            m2["committed_at"] = time.time()
-            if self._claim_version(m2):
-                if not self._advance_main_head(m2):
-                    continue
-                self._mark_batch_applied(batch_id)
-                return True
-        raise CommitConflict(f"lost 8 CAS races dropping {col} ({batch_id})")
+            return out
+
+        return self._commit_metadata(batch_id, f"dropping {col}", edit)
 
     def to_view(
         self,
@@ -3129,15 +3171,10 @@ class LakeTable:
             "snapshots_removed": snapshots_removed,
             "files_removed": files_removed,
             "orphans_removed": orphans_removed,
-            "batch_markers_removed": self._prune_batch_markers(
-                batch_marker_retention_sec
+            "batch_markers_removed": prune_marker_ledger(
+                self.manifest_dir, batch_marker_retention_sec
             ),
         }
-
-    def _prune_batch_markers(self, retention_sec: float | None) -> int:
-        return prune_marker_ledger(
-            os.path.join(self.manifest_dir, "batches"), retention_sec
-        )
 
     def compact_deltas(
         self,
@@ -3448,37 +3485,6 @@ class LakeTable:
 
     def lineage(self, ref: str | None = None) -> dict[str, Any]:
         return self.snapshot(ref=ref)["lineage"]
-
-
-def prune_marker_ledger(ledger: str, retention_sec: float | None) -> int:
-    """Prune batch-ledger marker files older than the retention (table
-    and catalog ledgers share this). A missing ledger dir is an empty
-    ledger, not an error."""
-    if retention_sec is None or not os.path.isdir(ledger):
-        return 0
-    cutoff = time.time() - retention_sec
-    removed = 0
-    for shard in os.listdir(ledger):
-        sd = os.path.join(ledger, shard)
-        if not os.path.isdir(sd):
-            continue
-        for fn in os.listdir(sd):
-            p = os.path.join(sd, fn)
-            try:
-                # age by the creation stamp recorded in the marker (see
-                # _mark_batch_applied); legacy/empty markers fall back
-                # to mtime
-                try:
-                    with open(p) as f:
-                        born = float(f.read().strip())
-                except (ValueError, OSError):
-                    born = os.path.getmtime(p)
-                if born < cutoff:
-                    os.remove(p)
-                    removed += 1
-            except FileNotFoundError:
-                pass
-    return removed
 
 
 def _merge_ranges(ranges: list[list[int]]) -> list[list[int]]:

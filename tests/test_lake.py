@@ -1400,6 +1400,34 @@ def test_point_lookup_bucket_derivation_single_key_col(spark, tmp_path):
     want_b = df.filter(F.col("k") == "k007").select(BUCKET_COL).first()[0]
     files = one.inputFiles()
     assert files and all(f"{BUCKET_COL}={want_b}/" in f for f in files)
+    # multi-byte UTF-8 keys (2/3/4-byte sequences) derive their buckets
+    # on the driver exactly as Spark's hash does
+    wide = [("ключ-7", "v64", 64), ("鍵07", "v65", 65), ("🔑07", "v66", 66)]
+    df2 = spark.createDataFrame(wide, f"k string, v string, {LSN_COL} long")
+    df2 = df2.withColumn(BUCKET_COL, lake.bucket_expr(16, ["k"]))
+    assert lake.commit(df2, [], "b2", (64, 66), mode="append")
+    for k, v, _lsn in wide:
+        got = lake.read(user_cols=True, keys=[k])
+        assert [(r.k, r.v) for r in got.collect()] == [(k, v)]
+        want_b = df2.filter(F.col("k") == k).select(BUCKET_COL).first()[0]
+        assert all(f"{BUCKET_COL}={want_b}/" in f for f in got.inputFiles())
+    # an int key column stays unpruned (the string bucket derivation
+    # would hash the wrong bytes) and exact
+    ints = LakeTable.create(
+        spark, str(tmp_path / "kv_int"), "k int, v string", ["k"], 16
+    )
+    idf = spark.createDataFrame(
+        [(i, f"v{i}", i) for i in range(64)],
+        f"k int, v string, {LSN_COL} long",
+    ).withColumn(BUCKET_COL, ints.bucket_expr(16, ["k"]))
+    assert ints.commit(
+        idf, [r[0] for r in idf.select(BUCKET_COL).distinct().collect()],
+        "b1", (0, 63),
+    )
+    got = ints.read(user_cols=True, keys=[7, 40])
+    assert sorted((r.k, r.v) for r in got.collect()) == [(7, "v7"), (40, "v40")]
+    opened = {f.split(f"{BUCKET_COL}=")[1].split("/")[0] for f in got.inputFiles()}
+    assert len(opened) > 2
 
 
 def test_point_lookup_through_cdc_replay_with_blooms(spark, tmp_lake_dir):
